@@ -12,13 +12,19 @@ the same contract on plain parquet + an atomic JSON manifest chain:
   change's ``seq``); the max-``_rev`` row per ``doc_id`` wins. Deletes are
   tombstone rows (``_deleted=true``) — merge-on-read, like RMT parts.
 * **Read-time finality** — ``read_final()`` is the ``SELECT … FINAL``
-  analog (reference ``pipelines/block_sync_pipeline.py:269-291``):
-  aggregate ``max_by(struct(*), _rev)`` per key, drop tombstones. max_by
-  does map-side partial aggregation, so hot keys collapse *before* the
-  shuffle — the skew mitigation SURVEY.md §4 calls for.
+  analog (reference ``pipelines/block_sync_pipeline.py:269-291``): the
+  max-``_rev`` row per key, tombstones dropped. One rule,
+  ``_dedup_plan``, picks one of two plans from manifest statistics
+  alone: a broadcast semi-join against the narrow ``(key, max(_rev))``
+  winner set while the winner bound fits the broadcast budget and the
+  parallelism, else one key-hash window. ``last_event_wins`` (max_by —
+  map-side partial aggregation collapses hot keys *before* the shuffle,
+  the skew mitigation SURVEY.md §4 calls for) is the same rule for
+  small pre-pruned frames and the reference tests pin both plans to.
 * **Explicit compaction** — ``compact()`` is the ``OPTIMIZE TABLE …
   FINAL`` analog (reference ``clickhouse/clickhouse_final_block_partition
-  .py:61-76``): folds all delta files into hash-bucketed base files.
+  .py:61-76``): folds all delta files into hash-bucketed base files
+  through the same plan decision, recorded in the commit.
 * **Atomic commits + snapshot isolation** — each commit writes data files
   then publishes manifest ``v{N}.json`` via an exclusive hard-link (POSIX
   ``link(2)`` fails if the target exists → optimistic concurrency).
@@ -60,6 +66,32 @@ DELETED_COL = "_deleted"
 BUCKET_COL = "_bucket"
 
 _MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
+
+
+def last_event_wins(df: DataFrame, key: str = "doc_id",
+                    seq: str = "seq") -> DataFrame:
+    """Collapse to one row per key: the event with the max ``seq`` wins.
+
+    Keeps all columns; deterministic given unique ``seq`` per key-event
+    (duplicate (key, seq) pairs are identical rows by construction, so
+    any winner is correct — the replayed-epoch case). The BCH
+    duplicate-txid analog (reference fixture
+    ``tests/resources/test_export_blocks_job/bitcoin_cash/block_with_duplicate_txid``)
+    generalized.
+
+    ``groupBy(key).agg(max_by(struct(payload), seq))`` rather than a
+    row_number window: max_by is a true aggregate, so Spark plans a
+    map-side partial aggregation that collapses hot keys on each input
+    partition *before* the shuffle — a Zipf-hot key contributes one row
+    per upstream partition instead of flooding a single window
+    partition. That plus AQE skew-join splitting for the residual
+    shuffle is the engine's skew defense (SURVEY.md §4).
+    """
+    payload = [c for c in df.columns if c != key]
+    agg = df.groupBy(key).agg(
+        F.max_by(F.struct(*payload), F.col(seq)).alias("_latest")
+    )
+    return agg.select(key, "_latest.*")
 
 
 class CommitConflict(RuntimeError):
@@ -262,44 +294,23 @@ class LakeTable:
         self,
         spark: SparkSession,
         version: int | None = None,
-        strategy: str = "auto",
     ) -> DataFrame:
         """Latest row image per key, tombstones dropped — ``FINAL``.
 
         Fast path: if only compacted base files exist, they are already
         unique-per-key, so no dedup aggregation is planned at all.
 
-        Dedup strategies over deltas:
-        * ``agg``  — ``groupBy(key).max_by(struct(payload), _rev)``: one
-          shuffle of the full (wide) rows, planned as a SortAggregate
-          because the buffer holds arrays. Partial phase collapses hot
-          keys map-side. Right when the winner set is huge.
+        Over deltas, ``_dedup_plan`` picks one of two plans from
+        manifest statistics alone (no job, no driver sync):
         * ``join`` — hash-aggregate the NARROW ``(key, max(_rev))``
           winner set, then broadcast-semi-join it back: the wide rows
-          are never shuffled or sorted at all; only the winner rows
-          (≤ live keys) pass through a small dedup. Right when winners
-          fit the broadcast budget — the common compaction case.
-        * ``auto`` — decided ENTIRELY from manifest statistics, no job
-          and no driver sync: ``join`` when the winner-count upper
-          bound fits ``broadcast_winner_limit``, ``window`` otherwise.
-          The bound is min(summed file rows, running ``keys_bound``) —
-          the latter accumulates each append commit's HLL distinct-key
-          estimate (observed on the write job itself, zero extra cost)
-          and is reset exact by full compaction, so a hot-key replay
-          whose 16M delta rows cover 1.1M keys still picks the
-          broadcast join from pure metadata. This replaces the
-          round-4 exact-count probe whose ``count()`` sync was a fixed
-          driver-serial phase at every cluster size.
-        * ``probe`` — the exact-count variant: run a narrow
-          (key, max_rev) pass, decide join-vs-agg on its TRUE winner
-          count, and reuse the checkpointed winners in the join. Best
-          absolute wall on few cores when file stats badly overcount
-          winners (A/B'd: wins/ties window at 1 and 4 isolated
-          executors at 16M events), but its count sync + broadcast
-          build are driver-serial — prefer ``auto`` on real clusters.
+          are never shuffled or sorted; only the winner rows (≤ live
+          keys) pass through a small safety dedup.
         * ``window`` — one key-hash exchange → sort → row_number: no
-          broadcast collect/build and no count sync (serial-phase-free;
-          see ``compact``'s docstring for the A/B).
+          broadcast collect/build and no count sync.
+
+        The rule: ``join`` iff the winner bound fits
+        ``_broadcast_winner_limit`` and bound × parallelism ≤ 2 × rows.
         """
         m = self.manifest(version)
         schema = self.schema(version)
@@ -327,164 +338,97 @@ class LakeTable:
                     ~F.col(DELETED_COL)
                 ).drop(DELETED_COL)
                 merged = self._dedup_final(
-                    spark, dirty, schema, strategy, m.get("keys_bound")
+                    spark, dirty, schema, m.get("keys_bound")
                 )
                 return base_part.unionByName(merged)
-        return self._dedup_final(
-            spark, files, schema, strategy, m.get("keys_bound")
-        )
+        return self._dedup_final(spark, files, schema, m.get("keys_bound"))
 
     def _dedup_final(self, spark: SparkSession, files: list[dict],
-                     schema: T.StructType, strategy: str,
+                     schema: T.StructType,
                      keys_bound: int | None = None) -> DataFrame:
-        latest = self._dedup_latest(spark, files, schema, strategy, keys_bound)
+        latest = self._dedup_latest(spark, files, schema, keys_bound)
         return latest.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
 
+    @classmethod
+    def _dedup_plan(cls, files: list[dict], keys_bound: int | None,
+                    par: int) -> dict:
+        """The dedup plan for ``files`` and its inputs, decided from
+        manifest statistics only — no winner-count job, no driver sync.
+
+        ``rows`` (summed file rows) and ``keys_bound`` (the manifest's
+        running per-commit HLL distinct-key estimates, inflated 10% —
+        a 2-sigma margin over HLL's default 5% rsd) both upper-bound the
+        distinct winner count; ``bound`` is the tighter one. The
+        broadcast ``join`` needs the winners inside
+        ``_broadcast_winner_limit``, and it only pays off while
+        bound × par ≤ 2 × rows: its cost is serial-ish in the winner
+        count (driver collect + hash-relation build, shipped to every
+        executor), while the ``window`` plan spreads the wide-row
+        shuffle over ``par`` cores. Interleaved A/B at sf1.0 local[32]
+        (20.4M rows, 1.42M winners): join 6.3-21.2 s vs window
+        5.2-6.0 s; at 1-4 process-isolated executors with 1.1M winners
+        the join won ~2x — both regimes fall out of this rule.
+
+        Stats-less tables (``keys_bound is None`` — any append without a
+        distinct-key estimate, e.g. every ``TableMirror`` downstream
+        append until a full compaction) have ``bound == rows``, so the
+        rule picks ``window`` whenever ``par > 2``. That is intended:
+        with no evidence that rows collapse, never broadcast a
+        table-sized winner set."""
+        rows = sum(f["rows"] or 0 for f in files)
+        bound = rows
+        if keys_bound is not None:
+            bound = min(rows, int(keys_bound * 1.10) + 16)
+        plan = (
+            "join"
+            if bound <= cls._broadcast_winner_limit and bound * par <= 2 * rows
+            else "window"
+        )
+        return {"plan": plan, "rows": rows, "bound": bound, "par": par}
+
     def _dedup_latest(self, spark: SparkSession, files: list[dict],
-                      schema: T.StructType, strategy: str,
+                      schema: T.StructType,
                       keys_bound: int | None = None) -> DataFrame:
         """Latest row image per key, tombstones KEPT (``_deleted`` flags
-        the losers-of-nothing: keys whose newest event is a delete)."""
+        keys whose newest event is a delete)."""
         df = self._read_files(spark, files, schema)
-        winners = None
-        if strategy == "auto":
-            # job-free decision from manifest stats only — NO winner
-            # count job, NO driver sync. Two independent upper bounds on
-            # the distinct winner count: (a) summed file rows (base
-            # files are unique-per-key; delta rows overcount rewritten
-            # keys), and (b) the manifest's running keys_bound — the
-            # per-commit HLL distinct estimates accumulated by
-            # append_delta (inflated 10% for HLL error). (b) is what
-            # makes hot-key replays pick the broadcast join without the
-            # old exact-count probe: 16M delta rows over 1.1M keys bound
-            # to ~1.2M, not 16M. "join" chosen here is broadcast-safe
-            # because both are near-upper bounds (see the ±10% HLL
-            # caveat above); past the budget the plan degrades to the
-            # serial-phase-free window — exactly where a billion-key
-            # table needs the shuffle plan anyway.
-            #
-            # r06 refinement — the choice is also PARALLELISM-aware:
-            # the broadcast path's cost is serial-ish in the winner
-            # count (driver collect + hash-relation build, then the
-            # relation ships to every executor: ~bound x parallelism
-            # bytes of traffic), while the window plan's cost is the
-            # wide-row shuffle spread over the cluster (~rows / cores
-            # per core). So the join only pays off while
-            # bound x parallelism stays within ~2x the row count.
-            # Interleaved A/B at sf1.0 local[32] (20.4M rows, 1.42M
-            # winners): join 6.3-21.2 s (driver-serial build is host-
-            # weather-exposed) vs window 5.2-6.0 s; at 1-4 process-
-            # isolated executors with 1.1M winners the join won ~2x
-            # (round-5 A/B) — both regimes fall out of this rule with
-            # no count job and no driver sync.
-            est = sum(f["rows"] or 0 for f in files)
-            bound = est
-            if keys_bound is not None:
-                # 2-sigma margin over HLL's default 5% rsd
-                bound = min(est, int(keys_bound * 1.10) + 16)
-            par = spark.sparkContext.defaultParallelism
-            strategy = (
-                "join"
-                if (bound <= self._broadcast_winner_limit
-                    and bound * par <= 2 * est)
-                else "window"
-            )
-        elif strategy == "probe":
-            # exact-count variant: pay one narrow (key, max_rev) pass to
-            # learn the TRUE winner count before committing to a plan.
-            # The checkpointed winners feed the join when it fits, so
-            # the pass is reused — but when the answer is "agg" the
-            # checkpoint is abandoned, so explicitly release its
-            # executor-storage blocks (localCheckpoint blocks are
-            # non-replicated and are NOT lineage-recoverable).
-            est = sum(f["rows"] or 0 for f in files)
-            if est <= self._broadcast_winner_limit:
-                strategy = "join"
-            else:
-                winners = df.groupBy(self.key).agg(
-                    F.max(REV_COL).alias(REV_COL)
-                ).localCheckpoint()
-                n = winners.count()
-                if n <= self._broadcast_winner_limit:
-                    strategy = "join"
-                else:
-                    # Dataset.unpersist is a no-op for checkpoint blocks
-                    # (they belong to the RDD, not the SQL cache) — free
-                    # the LogicalRDD directly
-                    from ..util import free_local_checkpoint
-
-                    free_local_checkpoint(winners)
-                    winners = None
-                    strategy = "agg"
-        if strategy == "window":
-            # compaction's plan: ONE hash exchange on the key, sort,
-            # row_number — no broadcast collect/build, no winner count
-            # sync, no second dedup shuffle. The window is partitioned
-            # (never the global-sort anti-pattern); map-side partial agg
-            # is worth little here because epoch deltas are already
-            # pre-reduced per key, so the serial-phase-free plan scales
-            # with cores where the broadcast path pays fixed driver
-            # costs at every cluster size.
+        decision = self._dedup_plan(
+            files, keys_bound, spark.sparkContext.defaultParallelism
+        )
+        if decision["plan"] == "window":
+            # ONE hash exchange on the key, sort, row_number — no
+            # broadcast collect/build, no second dedup shuffle. The
+            # window is partitioned (never the global-sort
+            # anti-pattern); map-side partial agg is worth little here
+            # because epoch deltas are already pre-reduced per key.
             from pyspark.sql import Window as W
 
             w = W.partitionBy(self.key).orderBy(F.col(REV_COL).desc())
-            out = (
+            return (
                 df.withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
             )
-        elif strategy == "join":
-            if winners is None:
-                winners = df.groupBy(self.key).agg(
-                    F.max(REV_COL).alias(REV_COL)
-                )
-            joined = df.join(
-                F.broadcast(winners), [self.key, REV_COL], "left_semi"
-            )
-            # duplicate-delivery safety: identical (key, _rev) rows may
-            # exist across replayed delta files; tiny winner-sized dedup.
-            # Tables whose writer guarantees (key, _rev) uniqueness — the
-            # engine's own apply path does: the ledger makes epochs
-            # exactly-once and the change-log seq is unique — can set
-            # the assume_unique_rev property to skip this shuffle (the
-            # same source-uniqueness contract an Iceberg/Delta MERGE
-            # places on its source); the agg/window strategies never
-            # needed it (one row per key by construction).
-            if self.assume_unique_rev:
-                out = joined
-            else:
-                out = joined.dropDuplicates([self.key, REV_COL])
-        else:
-            payload = [f.name for f in schema.fields if f.name != self.key]
-            # max_by = partial-agg last-writer-wins: hot keys pre-collapse
-            # map-side instead of flooding one window partition.
-            agg = df.groupBy(self.key).agg(
-                F.max_by(F.struct(*payload), F.col(REV_COL)).alias("_latest")
-            )
-            out = agg.select(self.key, "_latest.*")
-        return out
+        winners = df.groupBy(self.key).agg(F.max(REV_COL).alias(REV_COL))
+        joined = df.join(F.broadcast(winners), [self.key, REV_COL], "left_semi")
+        # duplicate-delivery safety: identical (key, _rev) rows may
+        # exist across replayed delta files; tiny winner-sized dedup.
+        # Tables whose writer guarantees (key, _rev) uniqueness — the
+        # engine's own apply path does: the ledger makes epochs
+        # exactly-once and the change-log seq is unique — can set the
+        # assume_unique_rev property to skip this shuffle (the same
+        # source-uniqueness contract an Iceberg/Delta MERGE places on
+        # its source); the window plan never needs it (one row per key
+        # by construction).
+        if self.assume_unique_rev:
+            return joined
+        return joined.dropDuplicates([self.key, REV_COL])
 
     # winners above this row estimate fall back to the shuffle plan
     # (5M keys ≈ 200 MB broadcast — inside the default 1g driver-result
     # / executor-broadcast budgets with 2x headroom; 10M was flagged as
     # aggressive in round-1 review)
     _broadcast_winner_limit = 5_000_000
-
-    # dedup strategy used by compact(): "auto" (job-free, every phase
-    # executor-parallel — the scaling-safe default), or any explicit
-    # strategy from read_final ("probe" trades a driver-serial exact
-    # count + broadcast build for the best absolute wall on few cores)
-    dedup_strategy = "auto"
-
-    def read_bucket_files(
-        self, spark: SparkSession, buckets: set[int]
-    ) -> DataFrame:
-        """Bucket-pruned raw read (point-lookup / partial-compaction path)."""
-        m = self.manifest()
-        picked = [
-            f for f in m["files"] if f.get("bucket") is None or f["bucket"] in buckets
-        ]
-        return self._read_files(spark, picked, self.schema())
 
     def _point_lookup_files(self, value: str, bucket: int,
                             version: int | None = None) -> list[dict]:
@@ -504,66 +448,38 @@ class LakeTable:
 
     def point_lookup(self, spark: SparkSession, value,
                      version: int | None = None) -> DataFrame:
-        """Latest live row image for ONE key — the O(1)-ish read path.
-
-        Scan cost is the handful of files whose hash bucket AND footer
-        key range admit the key (``_point_lookup_files``), not the
-        table: at 10^10 rows with 4k buckets and compacted bases this is
-        typically 1-2 files, each further row-group-pruned by parquet's
-        own key statistics under the pushed ``key = value`` filter.
-        Returns an empty frame if the key is absent or deleted."""
-        nb = self.manifest(version).get("n_buckets", self.n_buckets)
-        schema = self.schema(version)
-        # hash the lookup value AS the table's key type: xxhash64 over a
-        # Python-inferred literal type (e.g. int32 for a small int, or
-        # string for a stringified number) yields a DIFFERENT hash than
-        # the write-side xxhash64 over the actual column, silently
-        # pruning the right bucket to an empty result (ADVICE r05)
-        ktype = schema[self.key].dataType
-        bucket_row = spark.range(1).select(
-            F.pmod(F.xxhash64(F.lit(value).cast(ktype)), F.lit(nb))
-        ).first()
-        cand = self._point_lookup_files(value, int(bucket_row[0]), version)
-        if not cand:
-            return spark.createDataFrame([], schema).filter(
-                ~F.col(DELETED_COL)
-            ).drop(DELETED_COL)
-        df = self._read_files(spark, cand, schema).filter(
-            F.col(self.key) == F.lit(value)
-        )
-        latest = self._dedup_latest_frame(df, schema)
-        return latest.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
-
-    def _dedup_latest_frame(self, df: DataFrame,
-                            schema: T.StructType) -> DataFrame:
-        """max_by last-writer-wins over an already-loaded frame (the agg
-        strategy, for tiny pre-pruned inputs)."""
-        payload = [f.name for f in schema.fields if f.name != self.key]
-        agg = df.groupBy(self.key).agg(
-            F.max_by(F.struct(*payload), F.col(REV_COL)).alias("_latest")
-        )
-        return agg.select(self.key, "_latest.*")
+        """Latest live row image for ONE key — ``scan_keys`` of one
+        value. Returns an empty frame if the key is absent or deleted."""
+        return self.scan_keys(spark, [value], version)
 
     def scan_keys(self, spark: SparkSession, values: list,
                   version: int | None = None) -> DataFrame:
         """Latest live images for a SMALL key list (batch point lookup):
         union of the keys' bucket+key-range-admitted files scanned ONCE
-        with an IN filter (pushed to parquet), then the tiny max_by
-        dedup. Scan cost ∝ files admitted for the requested keys, not
-        the table; for corpus-sized key sets use a broadcast/semi join
-        against ``read_final`` instead — this path computes one bucket
-        hash per requested key on the driver."""
+        with an IN filter (pushed to parquet), then the tiny
+        ``last_event_wins`` dedup. Scan cost ∝ files admitted for the
+        requested keys, not the table — at 10^10 rows with 4k buckets
+        and compacted bases typically 1-2 files per key, each further
+        row-group-pruned by parquet's own key statistics. For
+        corpus-sized key sets use a broadcast/semi join against
+        ``read_final`` instead — this path computes one bucket hash per
+        requested key in one tiny driver job."""
         if not values:
             raise ValueError("scan_keys needs at least one key")
         nb = self.manifest(version).get("n_buckets", self.n_buckets)
-        # the key frame is typed from the TABLE schema, not assumed
-        # string: a non-string key hashed as string lands in the wrong
-        # buckets and the scan silently misses every row (ADVICE r05)
-        ktype = self.schema(version)[self.key].dataType
-        brows = spark.createDataFrame(
-            [(v,) for v in values],
-            T.StructType([T.StructField(self.key, ktype)]),
-        ).select(
+        schema = self.schema(version)
+        # hash and filter the values AS the table's key type: xxhash64
+        # over a Python-inferred literal type (e.g. int32 for a small
+        # int, or string for a stringified number) yields a DIFFERENT
+        # hash than the write-side xxhash64 over the actual column,
+        # silently pruning the right bucket to an empty result (ADVICE
+        # r05); a value that does not cast matches no row
+        ktype = schema[self.key].dataType
+        brows = spark.range(1).select(
+            F.explode(
+                F.array(*[F.lit(v).cast(ktype) for v in values])
+            ).alias(self.key)
+        ).dropna().select(
             self.key,
             F.pmod(F.xxhash64(F.col(self.key)), F.lit(nb)).alias("b"),
         ).collect()
@@ -572,15 +488,14 @@ class LakeTable:
             for f in self._point_lookup_files(r[self.key], int(r["b"]),
                                               version):
                 cand_paths[f["path"]] = f
-        schema = self.schema(version)
         if not cand_paths:
             return spark.createDataFrame([], schema).filter(
                 ~F.col(DELETED_COL)
             ).drop(DELETED_COL)
         df = self._read_files(
             spark, list(cand_paths.values()), schema
-        ).filter(F.col(self.key).isin(*values))
-        latest = self._dedup_latest_frame(df, schema)
+        ).filter(F.col(self.key).isin(*[r[self.key] for r in brows]))
+        latest = last_event_wins(df, self.key, REV_COL)
         return latest.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
 
     # ---------------------------------------------------------------- writes
@@ -788,10 +703,7 @@ class LakeTable:
         changed = self._read_files(spark, cand, schema).filter(
             F.col(REV_COL) > rev_a
         )
-        payload = [f.name for f in schema.fields if f.name != self.key]
-        latest = changed.groupBy(self.key).agg(
-            F.max_by(F.struct(*payload), F.col(REV_COL)).alias("_x")
-        ).select(self.key, "_x.*")
+        latest = last_event_wins(changed, self.key, REV_COL)
         if not classify:
             return latest.withColumn(
                 "_change_type",
@@ -801,7 +713,6 @@ class LakeTable:
             spark,
             self.manifest(from_version)["files"],
             self.schema(from_version),
-            "auto",
             self.manifest(from_version).get("keys_bound"),
         )
         keys = latest.select(self.key)
@@ -893,7 +804,7 @@ class LakeTable:
         because it never consults the before-state)."""
         before = self._dedup_latest(
             spark, self.manifest(from_version)["files"],
-            self.schema(from_version), "auto",
+            self.schema(from_version),
             self.manifest(from_version).get("keys_bound"),
         ).select(
             F.col(self.key),
@@ -902,7 +813,7 @@ class LakeTable:
         )
         schema = self.schema(to_version)
         after = self._dedup_latest(
-            spark, self.manifest(to_version)["files"], schema, "auto",
+            spark, self.manifest(to_version)["files"], schema,
             self.manifest(to_version).get("keys_bound"),
         )
         j = after.join(before, self.key, "left")
@@ -1128,8 +1039,7 @@ class LakeTable:
         with open(p) as f:
             return json.load(f)
 
-    def read_staged(self, spark: SparkSession, staging_id: str,
-                    strategy: str = "auto") -> DataFrame:
+    def read_staged(self, spark: SparkSession, staging_id: str) -> DataFrame:
         """The table state AS IF the staged commit were published — the
         audit surface of write-audit-publish. Runs the normal final-state
         dedup over the staged manifest's file set; no committed reader
@@ -1137,9 +1047,8 @@ class LakeTable:
         st = self._load_staged(staging_id)
         nm = st["manifest"]
         schema = schema_from_json(json.dumps(nm["schema"]))
-        return self._dedup_final(
-            spark, nm["files"], schema, strategy, nm.get("keys_bound")
-        )
+        return self._dedup_final(spark, nm["files"], schema,
+                                 nm.get("keys_bound"))
 
     def publish_staged(self, staging_id: str) -> dict:
         """Atomically link a staged commit into the version chain.
@@ -1271,24 +1180,18 @@ class LakeTable:
         if new_n_buckets is not None:
             self.n_buckets = new_n_buckets
         schema = self.schema()
-        # job-free auto dedup (broadcast join while the manifest row
-        # bound fits the budget, single-exchange window beyond) +
-        # shuffle-free bucket write. Rationale: the exact-count "probe"
-        # variant wins/ties on absolute wall at 1 and 4 isolated
-        # executors (its winner collect is small next to the saved wide
-        # sort) but its count() sync is a fixed driver-serial phase. The
-        # shipped auto gets the SAME broadcast-join plan with NO job:
-        # the manifest's running keys_bound (per-commit HLL estimates
-        # accumulated at append time, riding the write job) bounds the
-        # winner count, so a 16M-row/1.1M-key replay compaction decides
-        # "join" from pure metadata — A/B'd: the window plan is ~2x
-        # slower at BOTH 1 and 4 isolated executors with the same ~2.3x
-        # internal scaling, so avoiding the wide shuffle+sort wins at
-        # every cluster size while the bound fits the broadcast budget.
-        final = self._dedup_latest(
-            spark, target, schema, self.dedup_strategy,
-            m.get("keys_bound"),
+        # the dedup plan from manifest stats alone (_dedup_plan: the
+        # broadcast join while the winner bound fits the budget and the
+        # parallelism, the single-exchange window beyond) + shuffle-free
+        # bucket write. The running keys_bound (per-commit HLL estimates
+        # riding the apply write job) bounds the winner count, so a
+        # 16M-row/1.1M-key replay compaction picks the join with no
+        # count job. The decision and its inputs go into the commit so
+        # an operator can read which plan ran, and why, from metadata.
+        dedup = self._dedup_plan(
+            target, m.get("keys_bound"), spark.sparkContext.defaultParallelism
         )
+        final = self._dedup_latest(spark, target, schema, m.get("keys_bound"))
         if min_retained_rev is not None:
             final = final.filter(
                 ~F.col(DELETED_COL) | (F.col(REV_COL) >= min_retained_rev)
@@ -1303,6 +1206,7 @@ class LakeTable:
             "compact" if buckets is None else "compact-buckets"
         )
         nm["n_buckets"] = self.n_buckets
+        nm["dedup"] = dedup
         drop = {f["path"] for f in target}
         kept = [f for f in nm["files"] if f["path"] not in drop]
         nm["files"] = kept + entries if buckets is not None else entries

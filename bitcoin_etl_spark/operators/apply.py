@@ -32,8 +32,7 @@ import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from ..lake.table import DELETED_COL, REV_COL, LakeTable
-from .reduce import last_event_wins
+from ..lake.table import DELETED_COL, REV_COL, LakeTable, last_event_wins
 from .validate import tokens_valid_expr, tokens_valid_udf
 
 CHANGE_META_COLS = ("seq", "epoch", "op", "block", "reorg_of", "ingest_ts")

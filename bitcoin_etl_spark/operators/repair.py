@@ -26,8 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..lake.table import REV_COL, LakeTable
-from .reduce import last_event_wins
+from ..lake.table import REV_COL, LakeTable, last_event_wins
 
 
 def find_missing_epochs(

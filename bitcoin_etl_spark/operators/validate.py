@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import functions as F, types as T
 
 from .. import TOKEN_VOCAB_SIZE
 
@@ -58,17 +58,3 @@ def tokens_valid_expr() -> "F.Column":
     )
     return F.when(F.col("op") == "D", F.lit(True)).otherwise(arr_ok)
 
-
-def split_valid_invalid(
-    df: DataFrame, use_pandas_udf: bool = False
-) -> tuple[DataFrame, DataFrame]:
-    """Return (valid, quarantined). One source scan; the flag column is
-    computed once and reused by both branches."""
-    if use_pandas_udf:
-        flag = tokens_valid_udf(F.col("tokens"), F.col("n_tok"), F.col("op"))
-    else:
-        flag = tokens_valid_expr()
-    flagged = df.withColumn("_valid", flag)
-    valid = flagged.filter(F.col("_valid")).drop("_valid")
-    bad = flagged.filter(~F.col("_valid")).drop("_valid")
-    return valid, bad

@@ -120,7 +120,6 @@ class TableMirror:
         cursor_path: str,
         where: str | None = None,
         select: list[str] | None = None,
-        from_beginning: bool = True,
         max_versions_per_batch: int | None = None,
     ):
         from pyspark.sql import functions as F
@@ -130,32 +129,25 @@ class TableMirror:
         self.downstream = downstream
         self.where = where
         self.select = select
-        if from_beginning and not os.path.exists(cursor_path):
-            with open(cursor_path, "w") as f:
-                json.dump({"last_version": 0}, f)
-        # Crash-recovery (ADVICE r05): the mirror commits epoch_id =
-        # to_version into the downstream ledger ATOMICALLY with the
-        # rows, then advances the cursor. A crash between the two would
-        # re-deliver the old range — and if new upstream commits landed
-        # meanwhile, under a NEW epoch id (to_version moved), appending
-        # duplicate (key, _rev) rows that only the safety dedup hides.
-        # The ledger is the authoritative exactly-once record, so
-        # fast-forward the cursor to the last applied to_version before
-        # tailing; the next batch then starts exactly where the applied
-        # data ends.
-        applied = downstream.ledger("mirror")
-        if applied and os.path.exists(cursor_path):
-            last_applied = max(int(e) for e in applied)
-            with open(cursor_path) as f:
-                cur = json.load(f)
-            if last_applied > int(cur.get("last_version", 0)):
-                cur["last_version"] = last_applied
-                with open(cursor_path, "w") as f:
-                    json.dump(cur, f)
         self.tailer = ChangeFeedTailer(
             spark, upstream, self._sink, cursor_path, classify=False,
             max_versions_per_batch=max_versions_per_batch,
         )
+        # The mirror commits epoch_id = to_version into the downstream
+        # ledger ATOMICALLY with the rows, then advances the cursor. A
+        # crash between the two would re-deliver the old range — and if
+        # new upstream commits landed meanwhile, under a NEW epoch id
+        # (to_version moved), appending duplicate (key, _rev) rows that
+        # only the safety dedup hides (ADVICE r05). The ledger is the
+        # authoritative exactly-once record, so the cursor is seeded at
+        # (or fast-forwarded to) the last applied to_version — 0, the
+        # beginning, for an empty downstream — through the tailer's
+        # atomic temp-file + rename write: a crash mid-write leaves the
+        # old cursor readable.
+        applied = max((int(e) for e in downstream.ledger("mirror")), default=0)
+        last = self.tailer._read_cursor()
+        if last is None or applied > last:
+            self.tailer._write_cursor(applied)
 
     def _sink(self, feed: DataFrame, from_v: int, to_v: int) -> None:
         from ..lake.table import DELETED_COL, REV_COL

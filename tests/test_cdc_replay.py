@@ -234,30 +234,6 @@ def test_time_travel_and_snapshots(spark, tmp_path):
     assert early <= late
 
 
-def test_salted_reduce_matches_unsalted(spark, tmp_path):
-    """SURVEY §4 skew tool: the explicit two-phase salted last-event-wins
-    is exactly equivalent to the plain partial-agg form on a Zipf-hot
-    change log (max_by is algebraic, so phase composition is exact)."""
-    from bitcoin_etl_spark.operators.reduce import (
-        last_event_wins,
-        salted_last_event_wins,
-    )
-
-    scen = str(tmp_path / "skew")
-    generate_scenario(
-        scen,
-        ChangeLogSpec(n_epochs=2, events_per_epoch=4000, n_keys=300,
-                      zipf_a=1.3, seed=11),
-        oracle=False,
-    )
-    ch = _read_changes(spark, scen)
-    a = last_event_wins(ch)
-    b = salted_last_event_wins(ch, n_salts=8)
-    ka = sorted(tuple(r) for r in a.select("doc_id", "seq", "op").collect())
-    kb = sorted(tuple(r) for r in b.select("doc_id", "seq", "op").collect())
-    assert ka == kb and len(ka) > 0
-
-
 def test_incremental_compaction(spark, tmp_path):
     """Minor (L0→L1 fold) + bucket-subset major compaction preserve the
     exact final state at every step — the incremental OPTIMIZE path a
@@ -424,13 +400,68 @@ def test_read_changes_incremental_feed(spark, tmp_path):
     }
 
 
+_DEDUP_PLAN = LakeTable._dedup_plan.__func__
+
+
+def _force_plan(monkeypatch, plan):
+    """Pin ``LakeTable._dedup_plan`` to one plan (inputs unchanged)."""
+    monkeypatch.setattr(LakeTable, "_dedup_plan", classmethod(
+        lambda cls, files, kb, par: {**_DEDUP_PLAN(cls, files, kb, par),
+                                     "plan": plan}
+    ))
+
+
+def _reference_final(spark, table):
+    """The one reference both dedup plans are pinned to:
+    ``last_event_wins`` over every row version, tombstones dropped."""
+    from bitcoin_etl_spark.lake.table import (
+        DELETED_COL, REV_COL, last_event_wins,
+    )
+
+    return last_event_wins(table.read_raw(spark), table.key, REV_COL) \
+        .filter(~F.col(DELETED_COL)).drop(DELETED_COL)
+
+
+def _rowset(df):
+    return sorted(tuple(sorted(r.asDict().items())) for r in df.collect())
+
+
+def _executed_plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_dedup_plan_decision_table():
+    """The dedup rule as a pure function of manifest stats (no Spark
+    job): join iff bound <= _broadcast_winner_limit and bound x par <=
+    2 x rows, bound = min(rows, 1.1 x keys_bound + 16). Stats-less
+    (keys_bound None) means bound == rows, so the window plan wins
+    whenever par > 2 — no table-sized winner broadcast without evidence
+    that rows collapse."""
+    lim = LakeTable._broadcast_winner_limit
+    files = [{"rows": 60}, {"rows": 40}, {"rows": None}]
+    cases = [
+        # (name, files, keys_bound, par) -> plan, bound
+        ("stats-less, par 4", files, None, 4, "window", 100),
+        ("stats-less, par 2", files, None, 2, "join", 100),
+        ("keys collapse under the limit", [{"rows": 1000}], 50, 8,
+         "join", 71),
+        ("bound over the limit", [{"rows": 3 * lim}], lim, 1,
+         "window", int(lim * 1.10) + 16),
+        ("bound x par over 2 x rows", [{"rows": 1000}], 600, 4,
+         "window", 676),
+    ]
+    for name, fs, kb, par, plan, bound in cases:
+        got = LakeTable._dedup_plan(fs, kb, par)
+        rows = sum(f["rows"] or 0 for f in fs)
+        assert got == {"plan": plan, "rows": rows, "bound": bound,
+                       "par": par}, name
+
+
 def test_dedup_auto_exact_winner_decision(spark, tmp_path, monkeypatch):
-    """Strategy semantics on a hot-key table whose 32 delta rows
-    collapse to 8 winners, with the broadcast limit patched below the
-    row estimate: ``auto`` must stay job-free (falls to the
-    serial-phase-free window plan), ``probe`` must discover via the
-    exact narrow count that the winners fit and take the broadcast
-    join — and every strategy must produce the identical final state."""
+    """A hot-key table whose 32 delta rows collapse to 8 winners, with
+    the broadcast limit patched below the row estimate: the job-free
+    decision takes the window plan (no BroadcastHashJoin), and both
+    plans produce the ``last_event_wins`` reference state."""
     from pyspark.sql import types as T
 
     payload = T.StructType([
@@ -456,27 +487,27 @@ def test_dedup_auto_exact_winner_decision(spark, tmp_path, monkeypatch):
     est = sum(f["rows"] or 0 for f in table.manifest()["files"])
     assert est > 10, "fixture must exceed the (patched) broadcast limit"
     expect = {f"k{k}": 40 + k for k in range(6)} | {"extra1": 1, "extra2": 2}
-    # auto: est over the limit → job-free window plan, correct result
-    final = table.read_final(spark, strategy="auto")
-    got = {r["doc_id"]: r["val"] for r in final.collect()}
-    assert got == expect
-    # probe: exact winner count (8) is under the limit → join path
-    probed = {r["doc_id"]: r["val"]
-              for r in table.read_final(spark, strategy="probe").collect()}
-    assert probed == expect
-    # every explicit strategy agrees
-    for strat in ("join", "agg", "window"):
-        alt = {r["doc_id"]: r["val"]
-               for r in table.read_final(spark, strategy=strat).collect()}
-        assert alt == expect, strat
+    # est over the limit → job-free window plan, correct result
+    final = table.read_final(spark)
+    plan = _executed_plan(final)
+    assert "BroadcastHashJoin" not in plan, plan[:2000]
+    assert "Window" in plan, plan[:2000]
+    assert {r["doc_id"]: r["val"] for r in final.collect()} == expect
+    ref = _rowset(_reference_final(spark, table))
+    for forced in ("join", "window"):
+        _force_plan(monkeypatch, forced)
+        got = table.read_final(spark)
+        assert ("BroadcastHashJoin" in _executed_plan(got)) == \
+            (forced == "join"), forced
+        assert _rowset(got) == ref, forced
 
 
-def test_dedup_auto_is_parallelism_aware(spark, tmp_path):
-    """r06: the job-free auto decision weighs the broadcast build's
-    serial cost against the per-core shuffle it saves — when the winner
-    bound is within the broadcast budget but bound x parallelism
-    exceeds ~2x the row count (rows barely collapse), auto must take
-    the window plan, not the broadcast join."""
+def test_dedup_auto_is_parallelism_aware(spark, tmp_path, monkeypatch):
+    """r06: the job-free decision weighs the broadcast build's serial
+    cost against the per-core shuffle it saves — when the winner bound
+    is within the broadcast budget but bound x parallelism exceeds ~2x
+    the row count (rows barely collapse), it must take the window plan,
+    not the broadcast join."""
     from pyspark.sql import types as T
 
     payload = T.StructType([
@@ -491,22 +522,74 @@ def test_dedup_auto_is_parallelism_aware(spark, tmp_path):
         "doc_id string, val long, _rev long, _deleted boolean",
     )
     table.append_delta(df, epoch_id=0)
-    bound = sum(f["rows"] for f in table.manifest()["files"])
-    kb = table.manifest()["keys_bound"]
-    if kb is not None:
-        bound = min(bound, int(kb * 1.10) + 16)
+    m = table.manifest()
     par = spark.sparkContext.defaultParallelism
-    assert bound * par > 2 * 120, "fixture must trip the parallelism term"
-    plan = table.read_final(spark, strategy="auto") \
-        ._jdf.queryExecution().executedPlan().toString()
+    decision = LakeTable._dedup_plan(m["files"], m["keys_bound"], par)
+    assert decision["bound"] * par > 2 * 120, \
+        "fixture must trip the parallelism term"
+    assert decision["plan"] == "window"
+    plan = _executed_plan(table.read_final(spark))
     assert "BroadcastHashJoin" not in plan, plan[:2000]
     assert "row_number" in plan or "Window" in plan, plan[:2000]
-    # results identical to the explicit join plan
-    got = sorted((r["doc_id"], r["val"])
-                 for r in table.read_final(spark, strategy="auto").collect())
-    ref = sorted((r["doc_id"], r["val"])
-                 for r in table.read_final(spark, strategy="join").collect())
-    assert got == ref
+    # results identical to the forced join plan and the reference
+    got = _rowset(table.read_final(spark))
+    assert got == _rowset(_reference_final(spark, table))
+    _force_plan(monkeypatch, "join")
+    assert _rowset(table.read_final(spark)) == got
+
+
+def test_compact_records_dedup_plan(spark, tmp_path, monkeypatch):
+    """compact writes its dedup decision and inputs into the commit
+    (``dedup``: plan, rows, bound, par) and the recorded plan is the one
+    that ran: ``join`` exactly when the compaction frame's executed
+    plan holds a BroadcastHashJoin. The field is per-commit (not
+    carried forward), and both plans leave the reference state."""
+    from pyspark.sql import types as T
+
+    payload = T.StructType([
+        T.StructField("doc_id", T.StringType(), False),
+        T.StructField("val", T.LongType(), True),
+    ])
+    table = LakeTable.create(str(tmp_path / "t"), payload, n_buckets=4)
+    write_plans = []
+    write_data = LakeTable._write_data
+
+    def spy(self, df, *args, **kwargs):
+        write_plans.append(_executed_plan(df))
+        return write_data(self, df, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "_write_data", spy)
+
+    def epochs(first, n):
+        # 2000 rows over the SAME 50 keys per epoch, with the writer's
+        # distinct-key stat: the keys_bound collapse picks the join
+        for e in range(first, first + n):
+            rows = [(f"k{i % 50}", e * 10_000 + i, e * 10_000 + i, False)
+                    for i in range(2000)]
+            table.append_delta(spark.createDataFrame(
+                rows, "doc_id string, val long, _rev long, _deleted boolean"
+            ), epoch_id=e, stats={"distinct_keys": 50})
+
+    par = spark.sparkContext.defaultParallelism
+    for limit, plan in ((LakeTable._broadcast_winner_limit, "join"),
+                        (10, "window")):
+        monkeypatch.setattr(LakeTable, "_broadcast_winner_limit", limit)
+        epochs(len(table.committed_epochs("default")), 3)
+        before = table.manifest()
+        ref = _rowset(_reference_final(spark, table))
+        write_plans.clear()
+        table.compact(spark)
+        rec = table.manifest()["dedup"]
+        assert rec == LakeTable._dedup_plan(
+            before["files"], before["keys_bound"], par
+        )
+        assert rec["plan"] == plan, rec
+        (executed,) = write_plans
+        assert ("BroadcastHashJoin" in executed) == (plan == "join"), \
+            executed[:2000]
+        assert _rowset(table.read_final(spark)) == ref
+    epochs(len(table.committed_epochs("default")), 1)
+    assert "dedup" not in table.manifest()
 
 
 def test_read_changes_across_schema_evolution(spark, tmp_path):
@@ -684,6 +767,10 @@ def test_point_lookup_prunes_by_bucket_and_key_range(spark, tmp_path):
     assert len(got) == 1 and got[0]["val"] == 778 and got[0]["_rev"] == 102
     assert table.point_lookup(spark, "k009").count() == 0  # deleted
     assert table.point_lookup(spark, "nope").count() == 0  # absent
+    ref = _reference_final(spark, table)
+    for k in ("k000", "k007", "k009", "nope"):
+        assert _rowset(table.point_lookup(spark, k)) == \
+            _rowset(ref.filter(F.col("doc_id") == k)), k
 
     # pruning is real: candidates for one key are a strict subset
     bucket = int(spark.range(1).select(
@@ -698,8 +785,8 @@ def test_point_lookup_prunes_by_bucket_and_key_range(spark, tmp_path):
 def test_keys_bound_enables_jobfree_broadcast_compaction(spark, tmp_path,
                                                          monkeypatch):
     """The manifest's running keys_bound (per-commit HLL distinct-key
-    estimates observed on the apply write job) must let the auto dedup
-    strategy pick the broadcast join from PURE METADATA when file rows
+    estimates observed on the apply write job) must let the dedup
+    decision pick the broadcast join from PURE METADATA when file rows
     overcount winners — the job-free replacement for the round-4
     exact-count probe — and full compaction must reset the bound to the
     exact base row count."""
@@ -739,9 +826,8 @@ def test_keys_bound_enables_jobfree_broadcast_compaction(spark, tmp_path,
     # limit between the key bound and the row estimate: only the HLL
     # bound can justify the broadcast join, with no count job
     monkeypatch.setattr(LakeTable, "_broadcast_winner_limit", 1000)
-    plan = table.read_final(spark, strategy="auto") \
-        ._jdf.queryExecution().executedPlan().toString()
-    assert "Broadcast" in plan, plan[:2000]
+    plan = _executed_plan(table.read_final(spark))
+    assert "BroadcastHashJoin" in plan, plan[:2000]
 
     # full compaction resets the bound to the exact base count
     table.compact(spark)
@@ -760,7 +846,7 @@ def test_keys_bound_enables_jobfree_broadcast_compaction(spark, tmp_path,
     assert table.manifest()["keys_bound"] is None
 
 
-def test_assume_unique_rev_skips_safety_dedup(spark, tmp_path):
+def test_assume_unique_rev_skips_safety_dedup(spark, tmp_path, monkeypatch):
     """The assume_unique_rev table property (writer guarantees globally
     unique (key, _rev) — true for the engine's own ledgered apply path)
     must produce the identical final state with a join plan that skips
@@ -783,21 +869,20 @@ def test_assume_unique_rev_skips_safety_dedup(spark, tmp_path):
             ), epoch_id=e)
         return t
 
+    _force_plan(monkeypatch, "join")
     plain = build(str(tmp_path / "a"), None)
     fast = build(str(tmp_path / "b"), {"assume_unique_rev": True})
     assert LakeTable.load(str(tmp_path / "b")).assume_unique_rev is True
     assert LakeTable.load(str(tmp_path / "a")).assume_unique_rev is False
 
-    exp = {r["doc_id"]: r["val"]
-           for r in plain.read_final(spark, strategy="join").collect()}
-    got = {r["doc_id"]: r["val"]
-           for r in fast.read_final(spark, strategy="join").collect()}
-    assert got == exp and len(got) == 30
+    exp = _rowset(_reference_final(spark, plain))
+    assert _rowset(plain.read_final(spark)) == exp and len(exp) == 30
+    assert _rowset(fast.read_final(spark)) == exp
 
     # the skip is visible in the plan: one Aggregate (the narrow winner
     # agg) instead of two (winner agg + dedup)
     def n_aggs(t):
-        plan = t.read_final(spark, strategy="join") \
+        plan = t.read_final(spark) \
             ._jdf.queryExecution().optimizedPlan().toString()
         return plan.count("Aggregate ")
 
@@ -1054,6 +1139,10 @@ def test_scan_keys_batch_point_lookup(spark, tmp_path):
     got = {r["doc_id"]: r["val"] for r in table.scan_keys(
         spark, ["k007", "k011", "k020", "nope"]).collect()}
     assert got == {"k007": 700, "k020": 20}
+    keys = ["k007", "k011", "k020", "nope"]
+    assert _rowset(table.scan_keys(spark, keys)) == _rowset(
+        _reference_final(spark, table).filter(F.col("doc_id").isin(keys))
+    )
 
     import pytest
     with pytest.raises(ValueError):

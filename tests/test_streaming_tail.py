@@ -317,6 +317,63 @@ def test_table_mirror_crash_redelivery_no_duplicates(spark, tmp_path):
     assert raw == [], f"duplicate (key,_rev) rows appended: {raw}"
 
 
+def test_table_mirror_torn_cursor_write_keeps_a_readable_cursor(
+        spark, tmp_path, monkeypatch):
+    """A write that dies midway through the mirror's cursor
+    fast-forward must leave a cursor that still parses (temp file +
+    atomic rename, never an in-place rewrite), and the next run must
+    fast-forward from the ledger and append no duplicate (key, _rev)
+    rows."""
+    import json as _json
+
+    import pytest
+    from pyspark.sql import functions as F, types as T
+
+    from bitcoin_etl_spark.lake.table import LakeTable
+    from bitcoin_etl_spark.streaming.feed import TableMirror
+
+    payload = T.StructType([
+        T.StructField("doc_id", T.StringType(), False),
+        T.StructField("val", T.LongType(), True),
+    ])
+    up = LakeTable.create(str(tmp_path / "up"), payload, n_buckets=4)
+    down = LakeTable.create(
+        str(tmp_path / "down"), payload, n_buckets=4,
+        properties={"assume_unique_rev": True},
+    )
+
+    def delta(rows, epoch):
+        up.append_delta(spark.createDataFrame(
+            rows, "doc_id string, val long, _rev long, _deleted boolean"
+        ), epoch_id=epoch)
+
+    cursor = str(tmp_path / "cursor.json")
+    delta([("a", 1, 1, False), ("b", 2, 2, False)], 0)
+    TableMirror(spark, up, down, cursor).run_available()
+    # crash after the downstream commit, before the cursor write
+    _json.dump({"last_version": 0}, open(cursor, "w"))
+    delta([("c", 3, 3, False)], 1)
+
+    def torn_dump(obj, f, *args, **kwargs):
+        f.write('{"last_ver')
+        raise OSError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(_json, "dump", torn_dump)
+        with pytest.raises(OSError, match="disk full"):
+            TableMirror(spark, up, down, cursor)
+    with open(cursor) as f:
+        assert _json.load(f) == {"last_version": 0}
+
+    TableMirror(spark, up, down, cursor).run_available()
+    state = {r["doc_id"]: r["val"] for r in down.read_final(spark).collect()}
+    assert state == {"a": 1, "b": 2, "c": 3}
+    raw = down.read_raw(spark).groupBy("doc_id", "_rev").agg(
+        F.count("*").alias("n")
+    ).filter(F.col("n") > 1).collect()
+    assert raw == [], f"duplicate (key,_rev) rows appended: {raw}"
+
+
 def test_table_mirror_follows_schema_evolution(spark, tmp_path):
     """A full (no-projection) TableMirror follows upstream ADDITIVE
     schema evolution: new columns appear downstream automatically (the
