@@ -66,6 +66,8 @@ DELETED_COL = "_deleted"
 BUCKET_COL = "_bucket"
 
 _MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
+# append_delta re-plans its manifest on a lost publish race this often
+_COMMIT_RETRIES = 3
 
 
 def last_event_wins(df: DataFrame, key: str = "doc_id",
@@ -132,20 +134,8 @@ class LakeTable:
         t.assume_unique_rev = bool(
             (properties or {}).get("assume_unique_rev", False)
         )
-        t._publish(
-            {
-                "version": 0,
-                "parent": None,
-                "schema": json.loads(full.json()),
-                "key": key,
-                "n_buckets": n_buckets,
-                "files": [],
-                "ledger": {},
-                "properties": properties or {},
-                "keys_bound": 0,
-                "committed_at": time.time(),
-            }
-        )
+        t._publish_root(json.loads(full.json()), [], {}, properties or {},
+                        keys_bound=0)
         return t
 
     @classmethod
@@ -188,6 +178,24 @@ class LakeTable:
             with open(os.path.join(self._manifest_dir, f"v{v}.json")) as f:
                 self._manifest_cache[v] = json.load(f)
         return self._manifest_cache[v]
+
+    def _publish_root(self, schema: dict, files: list[dict], ledger: dict,
+                      properties: dict, keys_bound: int | None,
+                      operation: str | None = None) -> None:
+        """Publish v0, the root of a new manifest chain."""
+        self._publish({
+            "version": 0,
+            "parent": None,
+            "schema": schema,
+            "key": self.key,
+            "n_buckets": self.n_buckets,
+            "files": files,
+            "ledger": ledger,
+            "properties": properties,
+            "keys_bound": keys_bound,
+            "committed_at": time.time(),
+            "operation": operation,
+        })
 
     def _publish(self, manifest: dict) -> None:
         """Atomically publish manifest v{N}: hard-link from a temp file —
@@ -295,59 +303,43 @@ class LakeTable:
         spark: SparkSession,
         version: int | None = None,
     ) -> DataFrame:
-        """Latest row image per key, tombstones dropped — ``FINAL``.
+        """Latest row image per key, tombstones dropped — ``FINAL``:
+        ``_final`` over the snapshot's files."""
+        m = self.manifest(version)
+        return self._final(spark, m["files"], self.schema(version),
+                           m.get("keys_bound"))
 
-        Fast path: if only compacted base files exist, they are already
-        unique-per-key, so no dedup aggregation is planned at all.
+    def _final(self, spark: SparkSession, files: list[dict],
+               schema: T.StructType,
+               keys_bound: int | None) -> DataFrame:
+        """Latest live row image per key over ``files``.
 
-        Over deltas, ``_dedup_plan`` picks one of two plans from
-        manifest statistics alone (no job, no driver sync):
+        Base files in buckets no delta touches are already
+        unique-per-key: they are read straight, so an all-base snapshot
+        plans no dedup at all, and after PARTIAL compaction the
+        merge-on-read cost stays proportional to the uncompacted
+        fraction, not the table. Every other file goes through
+        ``_dedup_latest``, whose ``_dedup_plan`` picks from manifest
+        statistics alone (no job, no driver sync):
         * ``join`` — hash-aggregate the NARROW ``(key, max(_rev))``
           winner set, then broadcast-semi-join it back: the wide rows
           are never shuffled or sorted; only the winner rows (≤ live
           keys) pass through a small safety dedup.
         * ``window`` — one key-hash exchange → sort → row_number: no
           broadcast collect/build and no count sync.
-
-        The rule: ``join`` iff the winner bound fits
-        ``_broadcast_winner_limit`` and bound × parallelism ≤ 2 × rows.
-        """
-        m = self.manifest(version)
-        schema = self.schema(version)
-        files = m["files"]
-        if all(f.get("kind") == "base" for f in files):
-            df = self._read_files(spark, files, schema)
-            return df.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
-        # bucket-pruned dedup after PARTIAL compaction: buckets whose
-        # files are all base are already unique-per-key — read them
-        # straight and pay the dedup aggregate only for the buckets that
-        # still carry deltas. Merge-on-read cost stays proportional to
-        # the uncompacted fraction, not the table. (Any unbucketed file
-        # forces the global path: its rows span every bucket.)
-        if all(f.get("bucket") is not None for f in files):
-            delta_buckets = {
-                f["bucket"] for f in files if f.get("kind") != "base"
-            }
-            clean = [
-                f for f in files
-                if f["kind"] == "base" and f["bucket"] not in delta_buckets
-            ]
-            dirty = [f for f in files if f["bucket"] in delta_buckets]
-            if clean and dirty:
-                base_part = self._read_files(spark, clean, schema).filter(
-                    ~F.col(DELETED_COL)
-                ).drop(DELETED_COL)
-                merged = self._dedup_final(
-                    spark, dirty, schema, m.get("keys_bound")
-                )
-                return base_part.unionByName(merged)
-        return self._dedup_final(spark, files, schema, m.get("keys_bound"))
-
-    def _dedup_final(self, spark: SparkSession, files: list[dict],
-                     schema: T.StructType,
-                     keys_bound: int | None = None) -> DataFrame:
-        latest = self._dedup_latest(spark, files, schema, keys_bound)
-        return latest.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
+        An unbucketed delta's rows span every bucket, so it sends every
+        file through the dedup."""
+        dirty = {f.get("bucket") for f in files if f.get("kind") != "base"}
+        if None in dirty:
+            clean, rest = [], files
+        else:
+            clean = [f for f in files if f["bucket"] not in dirty]
+            rest = [f for f in files if f["bucket"] in dirty]
+        df = self._read_files(spark, clean, schema)
+        if rest:
+            latest = self._dedup_latest(spark, rest, schema, keys_bound)
+            df = df.unionByName(latest) if clean else latest
+        return df.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
 
     @classmethod
     def _dedup_plan(cls, files: list[dict], keys_bound: int | None,
@@ -565,14 +557,12 @@ class LakeTable:
         return entries
 
     @staticmethod
-    def _count_rows(entries: list[dict], table_path: str,
-                    key: str | None = None) -> None:
-        """Fill per-file row counts, ``_rev`` min/max, and (when ``key``
-        is given) merge-key min/max from parquet footer statistics (no
-        data read). The rev range drives file-skipping in
-        ``read_changes``; the key range drives file-skipping in
-        ``point_lookup`` — the Iceberg lower_bounds/upper_bounds
-        manifest-stats analog."""
+    def _count_rows(entries: list[dict], table_path: str, key: str) -> None:
+        """Fill freshly written entries' row counts, ``_rev`` min/max and
+        merge-key min/max from parquet footer statistics (no data read).
+        The rev range drives file-skipping in ``read_changes``; the key
+        range drives file-skipping in ``point_lookup`` — the Iceberg
+        lower_bounds/upper_bounds manifest-stats analog."""
         from concurrent.futures import ThreadPoolExecutor
 
         import pyarrow.parquet as pq
@@ -592,9 +582,6 @@ class LakeTable:
             return (lo, hi) if hi is not None else None
 
         def _one(e):
-            done_key = key is None or "key_max" in e
-            if e["rows"] is not None and "rev_max" in e and done_key:
-                return
             md = pq.ParquetFile(
                 os.path.join(table_path, e["path"])
             ).metadata
@@ -607,29 +594,23 @@ class LakeTable:
             mm = _minmax(md, REV_COL)
             if mm is not None:
                 e["rev_min"], e["rev_max"] = int(mm[0]), int(mm[1])
-            if key is not None:
-                km = _minmax(md, key)
-                if km is not None:
-                    lo, hi = km
-                    if isinstance(lo, bytes):
-                        lo, hi = lo.decode("utf-8", "replace"), \
-                            hi.decode("utf-8", "replace")
-                    e["key_min"], e["key_max"] = lo, hi
+            km = _minmax(md, key)
+            if km is not None:
+                lo, hi = km
+                if isinstance(lo, bytes):
+                    lo, hi = lo.decode("utf-8", "replace"), \
+                        hi.decode("utf-8", "replace")
+                e["key_min"], e["key_max"] = lo, hi
 
         with ThreadPoolExecutor(max_workers=16) as ex:
             list(ex.map(_one, entries))
 
     def rev_high(self, version: int | None = None) -> int:
         """Highest ``_rev`` committed as of ``version`` (the snapshot's
-        change-log cursor). Served from manifest file entries; legacy
-        entries written before rev stats existed fall back to a
-        footer-only scan (no data read)."""
-        m = self.manifest(version)
-        legacy = [f for f in m["files"] if "rev_max" not in f]
-        if legacy:
-            self._count_rows(legacy, self.path)
+        change-log cursor), served from the manifest's file entries."""
         return max(
-            (f["rev_max"] for f in m["files"] if f.get("rev_max") is not None),
+            (f["rev_max"] for f in self.manifest(version)["files"]
+             if f.get("rev_max") is not None),
             default=-(1 << 62),
         )
 
@@ -645,34 +626,32 @@ class LakeTable:
         row-level change per key from the table state at ``from_version``
         to the state at ``to_version`` (default: current), as the
         after-image plus a ``_change_type`` column (INSERT /
-        UPDATE_AFTER / DELETE). A key changed and changed back nets to
-        its final state; a delete of a never-alive key is dropped.
+        UPDATE_AFTER / DELETE, or UPSERT / DELETE with
+        ``classify=False``). A key changed and changed back nets to its
+        final state; a delete of a never-alive key is dropped.
 
-        Scale shape: only files whose footer ``_rev`` range can exceed
-        ``rev_high(from_version)`` are read (file skipping from manifest
-        stats — compaction rewrites carry old revs and are skipped
-        entirely, so the scan is proportional to NEW data, not table
-        size). ``classify=True`` additionally semi-joins the
-        ``from_version`` state restricted to the changed keys to split
-        INSERT from UPDATE_AFTER; pass ``classify=False`` for the
-        single-scan UPSERT/DELETE feed when the distinction doesn't
-        matter downstream.
-
-        The fast path requires ``_rev`` values monotone across commits
-        (true for the change-log ``seq`` the streaming tail applies).
-        Patch-by-replay of a withheld epoch breaks that: its rows carry
-        their ORIGINAL low seq as ``_rev``, and although existing
-        winners can't change (tombstones retained through compaction
-        guarantee no resurrection), the replay CAN insert brand-new keys
-        or delete keys last touched before it — net changes below
-        ``rev_high(from_version)`` that rev-based skipping would drop.
-        Every append commit therefore records the rev range it added
-        (``appended_rev_min`` watermark); when any commit in
-        ``(from, to]`` appended revs ≤ ``rev_high(from_version)``, this
-        method falls back to a FULL SNAPSHOT DIFF of the two states
-        (correct for any rev order; costs two dedup scans + one
-        key join instead of a new-files-only scan). Commits older than
-        the watermark field are detected via manifest file-list diffs.
+        The after-image per key comes one of two ways:
+        * in order — ``last_event_wins`` over the rows above
+          ``rev_high(from_version)``, reading only files whose footer
+          ``_rev`` range reaches above it (compaction rewrites carry old
+          revs and are skipped entirely, so the scan is proportional to
+          NEW data, not table size). ``classify=False`` returns this
+          single scan as the feed (a never-alive delete then still
+          surfaces as DELETE); otherwise the ``from_version`` state is
+          restricted to the changed keys.
+        * out of order — the ``to_version`` state. Patch-by-replay of a
+          withheld epoch writes rows at their ORIGINAL low seq as
+          ``_rev``: it can insert brand-new keys or delete keys last
+          touched before it — net changes below
+          ``rev_high(from_version)`` that rev-based skipping would drop.
+          Every row-adding append records the lowest rev it added
+          (``appended_rev_min``); when any commit in ``(from, to]``
+          appended revs ≤ ``rev_high(from_version)``, the whole state is
+          compared (correct for any rev order; two dedup scans instead
+          of a new-files-only scan).
+        Both then take one left join against the ``from_version`` state's
+        (``_rev``, ``_deleted``) per key: rows whose pair differs are
+        the changes, classified by whether the key was alive before.
 
         Retention: ``from_version``'s snapshot must still be fully
         retained — ``vacuum(keep_versions=...)`` deletes data files of
@@ -692,46 +671,60 @@ class LakeTable:
         self._check_retained(from_version)
         rev_a = self.rev_high(from_version)
         lo = self._min_appended_rev(from_version, m_to["version"])
-        if lo is not None and lo <= rev_a:
-            return self._snapshot_diff_feed(
-                spark, from_version, to_version, classify
+        in_order = lo is None or lo > rev_a
+        if in_order:
+            cand = [
+                f for f in m_to["files"]
+                if f.get("rev_max") is None or f["rev_max"] > rev_a
+            ]
+            after = last_event_wins(
+                self._read_files(spark, cand, schema).filter(
+                    F.col(REV_COL) > rev_a
+                ),
+                self.key, REV_COL,
             )
-        cand = [
-            f for f in m_to["files"]
-            if f.get("rev_max") is None or f["rev_max"] > rev_a
-        ]
-        changed = self._read_files(spark, cand, schema).filter(
-            F.col(REV_COL) > rev_a
-        )
-        latest = last_event_wins(changed, self.key, REV_COL)
-        if not classify:
-            return latest.withColumn(
-                "_change_type",
-                F.when(F.col(DELETED_COL), "DELETE").otherwise("UPSERT"),
-            ).drop(DELETED_COL)
+            if not classify:
+                return after.withColumn(
+                    "_change_type",
+                    F.when(F.col(DELETED_COL), "DELETE").otherwise("UPSERT"),
+                ).drop(DELETED_COL)
+        else:
+            after = self._dedup_latest(spark, m_to["files"], schema,
+                                       m_to.get("keys_bound"))
+        m_from = self.manifest(from_version)
         before = self._dedup_latest(
-            spark,
-            self.manifest(from_version)["files"],
-            self.schema(from_version),
-            self.manifest(from_version).get("keys_bound"),
+            spark, m_from["files"], self.schema(from_version),
+            m_from.get("keys_bound"),
         )
-        keys = latest.select(self.key)
-        before_alive = (
-            before.join(keys, self.key, "left_semi")
-            .filter(~F.col(DELETED_COL))
-            .select(self.key, F.lit(True).alias("_was"))
+        if in_order:
+            before = before.join(after.select(self.key), self.key,
+                                 "left_semi")
+        before = before.select(
+            self.key,
+            F.col(REV_COL).alias("_b_rev"),
+            F.col(DELETED_COL).alias("_b_del"),
         )
-        out = latest.join(before_alive, self.key, "left")
+        changed = after.join(before, self.key, "left").filter(
+            F.col("_b_rev").isNull()
+            | (F.col(REV_COL) != F.col("_b_rev"))
+            | (F.col(DELETED_COL) != F.col("_b_del"))
+        )
+        was_alive = F.col("_b_rev").isNotNull() & ~F.col("_b_del")
+        upsert = (
+            F.when(was_alive, "UPDATE_AFTER").otherwise("INSERT")
+            if classify else F.lit("UPSERT")
+        )
         ct = (
-            F.when(F.col(DELETED_COL) & F.col("_was").isNotNull(), "DELETE")
+            F.when(F.col(DELETED_COL) & was_alive, "DELETE")
             .when(F.col(DELETED_COL), F.lit(None).cast("string"))
-            .when(F.col("_was").isNotNull(), "UPDATE_AFTER")
-            .otherwise("INSERT")
+            .otherwise(upsert)
         )
+        payload = [f.name for f in schema.fields
+                   if f.name not in (self.key, DELETED_COL)]
         return (
-            out.withColumn("_change_type", ct)
+            changed.withColumn("_change_type", ct)
             .filter(F.col("_change_type").isNotNull())
-            .drop("_was", DELETED_COL)
+            .select(self.key, *payload, "_change_type")
         )
 
     def _check_retained(self, version: int | None) -> None:
@@ -758,90 +751,15 @@ class LakeTable:
 
     def _min_appended_rev(self, from_version: int,
                           to_version: int) -> int | None:
-        """Smallest ``_rev`` ADDED by any append commit in
+        """Smallest ``_rev`` ADDED by any commit in
         ``(from_version, to_version]`` — the out-of-order (repair)
-        detector for read_changes. Served from the per-commit
-        ``appended_rev_min`` watermark; append manifests written before
-        the watermark existed fall back to a file-list diff against
-        their parent (footer stats only, no data read)."""
-        lo: int | None = None
-        prev_paths: set[str] | None = None
-        for v in range(from_version + 1, to_version + 1):
-            m = self.manifest(v)
-            if m.get("operation") not in (None, "append-delta"):
-                prev_paths = {f["path"] for f in m["files"]}
-                continue
-            if "appended_rev_min" in m:
-                v_lo = m["appended_rev_min"]
-            else:
-                if prev_paths is None:
-                    prev_paths = {
-                        f["path"] for f in self.manifest(v - 1)["files"]
-                    }
-                added = [f for f in m["files"] if f["path"] not in prev_paths]
-                need = [f for f in added if "rev_min" not in f]
-                if need:
-                    self._count_rows(need, self.path)
-                revs = [f["rev_min"] for f in added
-                        if f.get("rev_min") is not None and f.get("rows")]
-                v_lo = min(revs) if revs else None
-            prev_paths = {f["path"] for f in m["files"]}
-            if v_lo is not None and (lo is None or v_lo < lo):
-                lo = v_lo
-        return lo
-
-    def _snapshot_diff_feed(self, spark: SparkSession, from_version: int,
-                            to_version: int | None,
-                            classify: bool) -> DataFrame:
-        """Change feed as a full state diff — the correct-under-any-rev-
-        order fallback used when a repair commit wrote revs below the
-        feed cursor's high-water mark. Net change per key between the
-        two snapshots' latest images: rows whose (``_rev``,
-        ``_deleted``) pair differs, classified against the BEFORE
-        liveness (a key dead on both sides nets to nothing; a
-        never-alive delete is dropped — in classify=False mode this is
-        strictly NETTER than the fast path, which emits such DELETEs
-        because it never consults the before-state)."""
-        before = self._dedup_latest(
-            spark, self.manifest(from_version)["files"],
-            self.schema(from_version),
-            self.manifest(from_version).get("keys_bound"),
-        ).select(
-            F.col(self.key),
-            F.col(REV_COL).alias("_b_rev"),
-            F.col(DELETED_COL).alias("_b_del"),
-        )
-        schema = self.schema(to_version)
-        after = self._dedup_latest(
-            spark, self.manifest(to_version)["files"], schema,
-            self.manifest(to_version).get("keys_bound"),
-        )
-        j = after.join(before, self.key, "left")
-        changed = j.filter(
-            F.col("_b_rev").isNull()
-            | (F.col(REV_COL) != F.col("_b_rev"))
-            | (F.col(DELETED_COL) != F.col("_b_del"))
-        )
-        was_alive = F.col("_b_rev").isNotNull() & ~F.col("_b_del")
-        if classify:
-            ct = (
-                F.when(F.col(DELETED_COL) & was_alive, "DELETE")
-                .when(F.col(DELETED_COL), F.lit(None).cast("string"))
-                .when(was_alive, "UPDATE_AFTER")
-                .otherwise("INSERT")
-            )
-        else:
-            ct = (
-                F.when(F.col(DELETED_COL) & was_alive, "DELETE")
-                .when(F.col(DELETED_COL), F.lit(None).cast("string"))
-                .otherwise("UPSERT")
-            )
-        payload = [f.name for f in schema.fields if f.name != self.key]
-        return (
-            changed.withColumn("_change_type", ct)
-            .filter(F.col("_change_type").isNotNull())
-            .select(self.key, *[c for c in payload if c != DELETED_COL],
-                    "_change_type")
+        detector for read_changes, served from the ``appended_rev_min``
+        watermark that every row-adding append records."""
+        return min(
+            (self.manifest(v)["appended_rev_min"]
+             for v in range(from_version + 1, to_version + 1)
+             if "appended_rev_min" in self.manifest(v)),
+            default=None,
         )
 
     def _next_manifest(self, operation: str) -> dict:
@@ -892,7 +810,6 @@ class LakeTable:
         *,
         pipeline_id: str = "default",
         epoch_id: int | None = None,
-        stats: dict | None = None,
         stats_cb=None,
         staged: bool = False,
     ) -> dict:
@@ -929,11 +846,9 @@ class LakeTable:
             e["kind"] = "delta"
         self._count_rows(entries, self.path, key=self.key)
         rows = sum(e["rows"] for e in entries)
-        extra = dict(stats or {})
-        if stats_cb is not None:
-            # data write (the action) is done — observed metrics are ready;
-            # they land in the SAME atomic manifest commit as the data.
-            extra.update(stats_cb() or {})
+        # data write (the action) is done — observed metrics are ready;
+        # they land in the SAME atomic manifest commit as the data.
+        extra = dict(stats_cb() or {}) if stats_cb is not None else {}
 
         def build_nm() -> dict:
             """Metadata for this append ON TOP OF the current head —
@@ -1002,8 +917,7 @@ class LakeTable:
             return {"skipped": False, "staged": True, "staging_id": sid,
                     "epoch": epoch_id, "rows": rows,
                     "parent_version": nm["parent"]}
-        retries = int(os.environ.get("SPARK_GRAFT_COMMIT_RETRIES", "3"))
-        for attempt in range(retries + 1):
+        for attempt in range(_COMMIT_RETRIES + 1):
             try:
                 self._publish(nm)
                 return {"skipped": False, "epoch": epoch_id, "rows": rows,
@@ -1019,7 +933,7 @@ class LakeTable:
                     shutil.rmtree(os.path.join(self._data_dir, sub),
                                   ignore_errors=True)
                     return {"skipped": True, "epoch": epoch_id}
-                if attempt == retries:
+                if attempt == _COMMIT_RETRIES:
                     shutil.rmtree(os.path.join(self._data_dir, sub),
                                   ignore_errors=True)
                     raise
@@ -1042,13 +956,12 @@ class LakeTable:
     def read_staged(self, spark: SparkSession, staging_id: str) -> DataFrame:
         """The table state AS IF the staged commit were published — the
         audit surface of write-audit-publish. Runs the normal final-state
-        dedup over the staged manifest's file set; no committed reader
-        can see any of it."""
-        st = self._load_staged(staging_id)
-        nm = st["manifest"]
-        schema = schema_from_json(json.dumps(nm["schema"]))
-        return self._dedup_final(spark, nm["files"], schema,
-                                 nm.get("keys_bound"))
+        read (``_final``) over the staged manifest's file set; no
+        committed reader can see any of it."""
+        nm = self._load_staged(staging_id)["manifest"]
+        return self._final(spark, nm["files"],
+                           schema_from_json(json.dumps(nm["schema"])),
+                           nm.get("keys_bound"))
 
     def publish_staged(self, staging_id: str) -> dict:
         """Atomically link a staged commit into the version chain.
@@ -1274,19 +1187,11 @@ class LakeTable:
             files.append(dict(f))
         t = LakeTable(dest, key=self.key, n_buckets=m["n_buckets"])
         t.assume_unique_rev = self.assume_unique_rev
-        t._publish({
-            "version": 0,
-            "parent": None,
-            "schema": m["schema"],
-            "key": m["key"],
-            "n_buckets": m["n_buckets"],
-            "files": files,
-            "ledger": json.loads(json.dumps(m["ledger"])),
-            "properties": dict(m["properties"]),
-            "keys_bound": m.get("keys_bound"),
-            "committed_at": time.time(),
-            "operation": f"clone-of-{self.path}@v{m['version']}",
-        })
+        t._publish_root(
+            m["schema"], files, json.loads(json.dumps(m["ledger"])),
+            dict(m["properties"]), keys_bound=m.get("keys_bound"),
+            operation=f"clone-of-{self.path}@v{m['version']}",
+        )
         return t
 
     def plan_compaction(

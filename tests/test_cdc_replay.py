@@ -568,7 +568,7 @@ def test_compact_records_dedup_plan(spark, tmp_path, monkeypatch):
                     for i in range(2000)]
             table.append_delta(spark.createDataFrame(
                 rows, "doc_id string, val long, _rev long, _deleted boolean"
-            ), epoch_id=e, stats={"distinct_keys": 50})
+            ), epoch_id=e, stats_cb=lambda: {"distinct_keys": 50})
 
     par = spark.sparkContext.defaultParallelism
     for limit, plan in ((LakeTable._broadcast_winner_limit, "join"),
