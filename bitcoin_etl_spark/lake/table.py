@@ -719,6 +719,8 @@ class LakeTable:
             .when(F.col(DELETED_COL), F.lit(None).cast("string"))
             .otherwise(upsert)
         )
+        # one column order on both paths: the join plan of _dedup_latest
+        # moves _rev next to the key
         payload = [f.name for f in schema.fields
                    if f.name not in (self.key, DELETED_COL)]
         return (
