@@ -797,7 +797,11 @@ class LakeTable:
         self._publish(nm)
 
     def _align(self, df: DataFrame, schema: T.StructType) -> DataFrame:
-        """Project df onto schema: missing columns → typed nulls, order fixed."""
+        """Project df onto schema: missing columns → typed nulls, order fixed.
+        A frame whose names and types already match is returned as is."""
+        if [(f.name, f.dataType) for f in df.schema.fields] == \
+                [(f.name, f.dataType) for f in schema.fields]:
+            return df
         have = set(df.columns)
         cols = [
             F.col(f.name).cast(f.dataType) if f.name in have
@@ -849,8 +853,14 @@ class LakeTable:
         self._count_rows(entries, self.path, key=self.key)
         rows = sum(e["rows"] for e in entries)
         # data write (the action) is done — observed metrics are ready;
-        # they land in the SAME atomic manifest commit as the data.
-        extra = dict(stats_cb() or {}) if stats_cb is not None else {}
+        # they land in the SAME atomic manifest commit as the data. A
+        # failing callback (e.g. the caller's side write failed) aborts
+        # the commit: nothing is published and the delta files go.
+        try:
+            extra = dict(stats_cb() or {}) if stats_cb is not None else {}
+        except BaseException:
+            shutil.rmtree(os.path.join(self._data_dir, sub), ignore_errors=True)
+            raise
 
         def build_nm() -> dict:
             """Metadata for this append ON TOP OF the current head —

@@ -45,7 +45,9 @@ def tokens_valid_expr() -> "F.Column":
     """Pure-Catalyst equivalent of the validity rule (higher-order
     functions; whole-stage-codegen'd, no Python). Used on the hot path;
     the pandas UDF above satisfies the Arrow-UDF mandate and serves as a
-    cross-check in tests.
+    cross-check in tests. Building the Column takes ~250 py4j round
+    trips, so callers build it once and reuse it: it is unresolved, and
+    so valid against any frame.
     """
     arr_ok = (
         F.col("tokens").isNotNull()

@@ -213,6 +213,123 @@ def test_bad_rows_are_quarantined(spark, tmp_path):
     assert lin["quarantined"].sum() == q.count()
 
 
+def _bad_rows_epoch0(spark, tmp_path):
+    scen_dir = str(tmp_path / "scen")
+    generate_scenario(scen_dir, SCENARIOS["bad_rows"])
+    table = LakeTable.create(str(tmp_path / "t"), _payload_schema(),
+                             key="doc_id", n_buckets=8)
+    e0 = _read_changes(spark, scen_dir).filter(F.col("epoch") == 0)
+    return table, e0
+
+
+def test_quarantine_replay_after_crash_before_publish(spark, tmp_path,
+                                                      monkeypatch):
+    """A crash between the quarantine write and the manifest publish,
+    then a replay of the epoch: the quarantine holds one copy of the
+    epoch's bad rows, not two."""
+    table, e0 = _bad_rows_epoch0(spark, tmp_path)
+    applier = EpochApplier(table)
+    publish = LakeTable._publish
+    crashed = []
+
+    def crash_once(self, manifest):
+        if not crashed:
+            crashed.append(manifest["version"])
+            raise RuntimeError("crash before publish")
+        return publish(self, manifest)
+
+    monkeypatch.setattr(LakeTable, "_publish", crash_once)
+    with pytest.raises(RuntimeError, match="crash before publish"):
+        applier.apply_epoch(spark, e0, 0)
+    assert 0 not in table.committed_epochs(applier.pipeline_id)
+    assert not applier.apply_epoch(spark, e0, 0)["skipped"]
+    n_bad = table.lineage(spark).toPandas()["quarantined"].sum()
+    assert n_bad > 0
+    assert applier.quarantined(spark).count() == n_bad
+
+
+def _data_files(table):
+    import os
+
+    return [n for _r, _d, names in os.walk(os.path.join(table.path, "data"))
+            for n in names if n.endswith(".parquet")]
+
+
+def test_failed_quarantine_write_aborts_the_commit(spark, tmp_path):
+    """The eager quarantine write runs beside the delta write; if it
+    fails, the epoch publishes nothing and leaves no delta files, and a
+    retry commits normally."""
+    table, e0 = _bad_rows_epoch0(spark, tmp_path)
+    qroot = tmp_path / "q"
+    qroot.write_text("a file where the quarantine directory should be")
+    applier = EpochApplier(table, quarantine_dir=str(qroot))
+    v0 = table.current_version()
+    with pytest.raises(Exception):
+        applier.apply_epoch(spark, e0, 0)
+    assert table.current_version() == v0
+    assert 0 not in table.committed_epochs(applier.pipeline_id)
+    assert _data_files(table) == []
+    assert table.vacuum() == 0
+
+    qroot.unlink()
+    res = applier.apply_epoch(spark, e0, 0)
+    assert not res["skipped"] and res["quarantined"] > 0
+    assert 0 in table.committed_epochs(applier.pipeline_id)
+    assert applier.quarantined(spark).count() == res["quarantined"]
+
+
+def test_eager_quarantine_jobs_keep_the_callers_job_group(spark, tmp_path):
+    """Every job of an eager epoch, the overlapped quarantine write
+    included, runs under the job group set by the caller."""
+    import uuid
+
+    table, e0 = _bad_rows_epoch0(spark, tmp_path)
+    applier = EpochApplier(table)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    settle = sc._jsc.sc().listenerBus().waitUntilEmpty
+    group = f"apply-{uuid.uuid4().hex[:8]}"
+    settle()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "eager apply")
+    try:
+        res = applier.apply_epoch(spark, e0, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    settle()
+    assert res["quarantined"] > 0
+    # quarantine write + the pre-reduced delta write's map and result jobs
+    assert len(tracker.getJobIdsForGroup(group)) == 3
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+
+def test_validity_expr_flags_the_same_rows_as_pandas_udf(spark, tmp_path):
+    """The hot-path predicate (built once per applier) against its
+    oracle, the Arrow UDF: the same ``seq``s are invalid."""
+    from bitcoin_etl_spark.operators.validate import (
+        tokens_valid_expr,
+        tokens_valid_udf,
+    )
+
+    scen_dir = str(tmp_path / "scen")
+    generate_scenario(scen_dir, SCENARIOS["bad_rows"])
+    changes = _read_changes(spark, scen_dir)
+    flags = changes.select(
+        "seq", tokens_valid_expr().alias("expr"),
+        tokens_valid_udf(F.col("tokens"), F.col("n_tok"), F.col("op")).alias("udf"),
+    ).toPandas()
+    assert flags["expr"].notna().all() and flags["udf"].notna().all()
+    bad_expr = sorted(flags.loc[~flags["expr"].astype(bool), "seq"])
+    bad_udf = sorted(flags.loc[~flags["udf"].astype(bool), "seq"])
+    assert bad_expr and bad_expr == bad_udf
+    applier = EpochApplier(LakeTable.create(str(tmp_path / "t"),
+                                            _payload_schema()))
+    scanned = sorted(r.seq for r in applier.scan_quarantine(changes)
+                     .select("seq").collect())
+    assert scanned == bad_expr
+
+
 def test_repair_probes_clean_after_replay(spark, tmp_path):
     scen_dir = str(tmp_path / "scen")
     generate_scenario(scen_dir, SCENARIOS["reorg_rollback"])
