@@ -56,8 +56,11 @@ import re
 import shutil
 import time
 import uuid
+from collections import OrderedDict
+from functools import lru_cache
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
 
 from ..schemas import merge_schemas, schema_from_json
 
@@ -68,6 +71,23 @@ BUCKET_COL = "_bucket"
 _MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
 # append_delta re-plans its manifest on a lost publish race this often
 _COMMIT_RETRIES = 3
+# parsed manifests kept besides the head: enough for a feed range, a
+# time-travel read and the parent of the next commit, while driver
+# memory stays flat however long the version chain grows
+_MANIFEST_LRU = 8
+
+
+@lru_cache(maxsize=64)
+def _latest_exprs(columns: tuple[str, ...], key: str,
+                  seq: str) -> tuple[Column, tuple[Column, ...]]:
+    """``last_event_wins``' aggregate and output projection for one input
+    column list. Unresolved Columns carry no plan, so one set serves
+    every frame of that shape; building them costs py4j round trips,
+    which a small frame's whole read would otherwise pay per call."""
+    payload = [c for c in columns if c != key]
+    latest = F.col("_latest")
+    return (F.max_by(F.struct(*payload), F.col(seq)).alias("_latest"),
+            (F.col(key), *[latest.getField(c).alias(c) for c in payload]))
 
 
 def last_event_wins(df: DataFrame, key: str = "doc_id",
@@ -89,11 +109,57 @@ def last_event_wins(df: DataFrame, key: str = "doc_id",
     partition. That plus AQE skew-join splitting for the residual
     shuffle is the engine's skew defense (SURVEY.md §4).
     """
-    payload = [c for c in df.columns if c != key]
-    agg = df.groupBy(key).agg(
-        F.max_by(F.struct(*payload), F.col(seq)).alias("_latest")
+    agg, out = _latest_exprs(tuple(df.columns), key, seq)
+    return df.groupBy(key).agg(agg).select(*out)
+
+
+_NEW = "_new"  # read_changes' flag on after-side rows
+
+
+class _FeedExprs(NamedTuple):
+    """``read_changes``' expressions for one table column list."""
+    new: tuple[Column, ...]  # after-side rows, flagged
+    old: tuple[Column, ...]  # from-state rows: key, _rev, _deleted, flag
+    agg: tuple[Column, ...]  # the one keyed aggregate
+    keep: Column  # the aggregate rows that are changes
+    out: tuple[Column, ...]  # key, payload with _rev, _change_type
+    scan_out: tuple[Column, ...]  # the unclassified in-order scan's output
+
+
+@lru_cache(maxsize=64)
+def _feed_exprs(columns: tuple[str, ...], key: str,
+                classify: bool) -> _FeedExprs:
+    """Per key of ``new ∪ old``: the newest new row as ``_latest``, and
+    the newest old row's ``_rev`` and ``_deleted`` as ``_b_rev`` and
+    ``_b_del`` (``max``/``max_by`` skip the null ordering of the other
+    side's rows). A key with no new row has a null ``_latest``."""
+    is_new = F.col(_NEW)
+    new_rev = F.when(is_new, F.col(REV_COL))
+    old_rev = F.when(~is_new, F.col(REV_COL))
+    latest = F.col("_latest")
+    rev, deleted = latest.getField(REV_COL), latest.getField(DELETED_COL)
+    b_rev, b_del = F.col("_b_rev"), F.col("_b_del")
+    was_alive = b_rev.isNotNull() & ~b_del
+    changed = b_rev.isNull() | (rev != b_rev) | (deleted != b_del)
+    upsert = (F.when(was_alive, "UPDATE_AFTER").otherwise("INSERT")
+              if classify else F.lit("UPSERT"))
+    payload = [c for c in columns if c not in (key, DELETED_COL)]
+    return _FeedExprs(
+        new=(F.col("*"), F.lit(True).alias(_NEW)),
+        old=(F.col(key), F.col(REV_COL), F.col(DELETED_COL),
+             F.lit(False).alias(_NEW)),
+        agg=(F.max_by(F.struct(*[c for c in columns if c != key]), new_rev)
+             .alias("_latest"),
+             F.max(old_rev).alias("_b_rev"),
+             F.max_by(F.col(DELETED_COL), old_rev).alias("_b_del")),
+        # a delete of a key that was not alive before is no change
+        keep=latest.isNotNull() & changed & (~deleted | was_alive),
+        out=(F.col(key), *[latest.getField(c).alias(c) for c in payload],
+             F.when(deleted, "DELETE").otherwise(upsert).alias("_change_type")),
+        scan_out=(F.col(key), *map(F.col, payload),
+                  F.when(F.col(DELETED_COL), "DELETE").otherwise("UPSERT")
+                  .alias("_change_type")),
     )
-    return agg.select(key, "_latest.*")
 
 
 class CommitConflict(RuntimeError):
@@ -107,7 +173,9 @@ class LakeTable:
         self.n_buckets = n_buckets
         self._manifest_dir = os.path.join(path, "manifest")
         self._data_dir = os.path.join(path, "data")
-        self._manifest_cache: dict[int, dict] = {}
+        # the highest version parsed so far, plus an LRU of others
+        self._head: dict | None = None
+        self._manifest_cache: OrderedDict[int, dict] = OrderedDict()
         # writer contract: (key, _rev) pairs are globally unique (set via
         # the table property of the same name) — lets the broadcast-join
         # dedup skip its winner-sized safety shuffle
@@ -174,10 +242,24 @@ class LakeTable:
         v = self.current_version() if version is None else version
         if v is None:
             raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        if v not in self._manifest_cache:
+        head = self._head
+        if head is not None and head["version"] == v:
+            return head
+        cache = self._manifest_cache
+        m = cache.pop(v, None)
+        if m is None:
             with open(os.path.join(self._manifest_dir, f"v{v}.json")) as f:
-                self._manifest_cache[v] = json.load(f)
-        return self._manifest_cache[v]
+                m = json.load(f)
+        # a newer version becomes the head; the one it displaces goes to
+        # the LRU like any other version read
+        keep = m
+        if head is None or v > head["version"]:
+            self._head, keep = m, head
+        if keep is not None:
+            cache[keep["version"]] = keep
+            if len(cache) > _MANIFEST_LRU:
+                cache.popitem(last=False)
+        return m
 
     def _publish_root(self, schema: dict, files: list[dict], ledger: dict,
                       properties: dict, keys_bound: int | None,
@@ -630,28 +712,43 @@ class LakeTable:
         ``classify=False``). A key changed and changed back nets to its
         final state; a delete of a never-alive key is dropped.
 
-        The after-image per key comes one of two ways:
-        * in order — ``last_event_wins`` over the rows above
-          ``rev_high(from_version)``, reading only files whose footer
-          ``_rev`` range reaches above it (compaction rewrites carry old
-          revs and are skipped entirely, so the scan is proportional to
-          NEW data, not table size). ``classify=False`` returns this
-          single scan as the feed (a never-alive delete then still
-          surfaces as DELETE); otherwise the ``from_version`` state is
-          restricted to the changed keys.
-        * out of order — the ``to_version`` state. Patch-by-replay of a
-          withheld epoch writes rows at their ORIGINAL low seq as
-          ``_rev``: it can insert brand-new keys or delete keys last
-          touched before it — net changes below
-          ``rev_high(from_version)`` that rev-based skipping would drop.
-          Every row-adding append records the lowest rev it added
-          (``appended_rev_min``); when any commit in ``(from, to]``
-          appended revs ≤ ``rev_high(from_version)``, the whole state is
-          compared (correct for any rev order; two dedup scans instead
-          of a new-files-only scan).
-        Both then take one left join against the ``from_version`` state's
-        (``_rev``, ``_deleted``) per key: rows whose pair differs are
-        the changes, classified by whether the key was alive before.
+        Both paths build two frames and pass them through ONE keyed
+        aggregate:
+        * ``new`` — the after-side rows.
+          - In order: the rows above ``rev_high(from_version)``, read only
+            from files whose footer ``_rev`` range reaches above it
+            (compaction rewrites carry old revs and are skipped
+            entirely, so the scan is proportional to NEW data, not table
+            size). ``classify=False`` returns ``last_event_wins`` of this
+            single scan as the feed (a never-alive delete then still
+            surfaces as DELETE).
+          - Out of order: every row of the ``to_version`` state.
+            Patch-by-replay of a withheld epoch writes rows at their
+            ORIGINAL low seq as ``_rev``: it can insert brand-new keys
+            or delete keys last touched before it — net changes below
+            ``rev_high(from_version)`` that rev-based skipping would
+            drop. Every row-adding append records the lowest rev it
+            added (``appended_rev_min``); when any commit in
+            ``(from, to]`` appended revs ≤ ``rev_high(from_version)``,
+            the whole state is compared (correct for any rev order).
+        * ``old`` — the ``from_version`` state's rows, projected to
+          (key, ``_rev``, ``_deleted``). In order, only the rows of keys
+          in ``new``: a left-semi join with no broadcast hint, so
+          Spark's own size estimate of the new files picks its plan;
+          and when every new file carries a bucket (e.g. after
+          ``compact_deltas``) and the key is not a long or double,
+          only the from-state files of those buckets plus the unbucketed
+          ones, decided from the manifests.
+        ``groupBy(key)`` over ``new ∪ old`` then takes each key's newest
+        new row and its newest old ``(_rev, _deleted)``. No before-state
+        dedup runs first: a per-key max commutes with a key filter, so
+        the max over the key-filtered old rows IS the from-state image
+        of each changed key. A key with no new row yields nothing; a
+        key whose pair differs from the old one is a change, classified
+        by whether the key was alive before. The aggregate, the
+        changed-row predicate and the output projection are built once
+        per column list (``_feed_exprs``); only the ``_rev`` bound is
+        built per call.
 
         Retention: ``from_version``'s snapshot must still be fully
         retained — ``vacuum(keep_versions=...)`` deletes data files of
@@ -671,62 +768,47 @@ class LakeTable:
         self._check_retained(from_version)
         rev_a = self.rev_high(from_version)
         lo = self._min_appended_rev(from_version, m_to["version"])
-        in_order = lo is None or lo > rev_a
-        if in_order:
+        ex = _feed_exprs(tuple(schema.names), self.key, classify)
+        m_from = self.manifest(from_version)
+        schema_from = self.schema(from_version)
+        old_files = m_from["files"]
+        if lo is None or lo > rev_a:  # in order
             cand = [
                 f for f in m_to["files"]
                 if f.get("rev_max") is None or f["rev_max"] > rev_a
             ]
-            after = last_event_wins(
-                self._read_files(spark, cand, schema).filter(
-                    F.col(REV_COL) > rev_a
-                ),
-                self.key, REV_COL,
+            new = self._read_files(spark, cand, schema).filter(
+                F.col(REV_COL) > rev_a
             )
             if not classify:
-                return after.withColumn(
-                    "_change_type",
-                    F.when(F.col(DELETED_COL), "DELETE").otherwise("UPSERT"),
-                ).drop(DELETED_COL)
+                return last_event_wins(new, self.key, REV_COL).select(
+                    *ex.scan_out)
+            # a key's bucket is fixed by the bucket count and the key
+            # type, so a bucketed new file's keys live only in from-state
+            # files of its bucket or in unbucketed ones. Not so for a
+            # long or double key: widening from int or float changes its
+            # xxhash64, and files bucketed before the widening may remain
+            buckets = {f.get("bucket") for f in cand}
+            if (None not in buckets
+                    and m_from["n_buckets"] == m_to["n_buckets"]
+                    and not isinstance(schema[self.key].dataType,
+                                       (T.LongType, T.DoubleType))):
+                old_files = [f for f in old_files
+                             if f.get("bucket") is None
+                             or f["bucket"] in buckets]
+            new = new.select(*ex.new)
+            old = self._read_files(spark, old_files, schema_from).select(
+                *ex.old).join(new.select(self.key), self.key, "left_semi")
         else:
-            after = self._dedup_latest(spark, m_to["files"], schema,
-                                       m_to.get("keys_bound"))
-        m_from = self.manifest(from_version)
-        before = self._dedup_latest(
-            spark, m_from["files"], self.schema(from_version),
-            m_from.get("keys_bound"),
-        )
-        if in_order:
-            before = before.join(after.select(self.key), self.key,
-                                 "left_semi")
-        before = before.select(
-            self.key,
-            F.col(REV_COL).alias("_b_rev"),
-            F.col(DELETED_COL).alias("_b_del"),
-        )
-        changed = after.join(before, self.key, "left").filter(
-            F.col("_b_rev").isNull()
-            | (F.col(REV_COL) != F.col("_b_rev"))
-            | (F.col(DELETED_COL) != F.col("_b_del"))
-        )
-        was_alive = F.col("_b_rev").isNotNull() & ~F.col("_b_del")
-        upsert = (
-            F.when(was_alive, "UPDATE_AFTER").otherwise("INSERT")
-            if classify else F.lit("UPSERT")
-        )
-        ct = (
-            F.when(F.col(DELETED_COL) & was_alive, "DELETE")
-            .when(F.col(DELETED_COL), F.lit(None).cast("string"))
-            .otherwise(upsert)
-        )
-        # one column order on both paths: the join plan of _dedup_latest
-        # moves _rev next to the key
-        payload = [f.name for f in schema.fields
-                   if f.name not in (self.key, DELETED_COL)]
+            new = self._read_files(spark, m_to["files"], schema).select(
+                *ex.new)
+            old = self._read_files(spark, old_files, schema_from).select(
+                *ex.old)
         return (
-            changed.withColumn("_change_type", ct)
-            .filter(F.col("_change_type").isNotNull())
-            .select(self.key, *payload, "_change_type")
+            new.unionByName(old, allowMissingColumns=True)
+            .groupBy(self.key).agg(*ex.agg)
+            .where(ex.keep)
+            .select(*ex.out)
         )
 
     def _check_retained(self, version: int | None) -> None:
@@ -757,12 +839,9 @@ class LakeTable:
         ``(from_version, to_version]`` — the out-of-order (repair)
         detector for read_changes, served from the ``appended_rev_min``
         watermark that every row-adding append records."""
-        return min(
-            (self.manifest(v)["appended_rev_min"]
-             for v in range(from_version + 1, to_version + 1)
-             if "appended_rev_min" in self.manifest(v)),
-            default=None,
-        )
+        revs = (self.manifest(v).get("appended_rev_min")
+                for v in range(from_version + 1, to_version + 1))
+        return min((r for r in revs if r is not None), default=None)
 
     def _next_manifest(self, operation: str) -> dict:
         m = self.manifest()

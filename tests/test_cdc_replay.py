@@ -850,6 +850,183 @@ def test_read_changes_retention_guard(spark, tmp_path):
     assert table.read_changes(spark, head).count() == 0
 
 
+def _kv_table(tmp_path, n_buckets=8):
+    from pyspark.sql import types as T
+
+    payload = T.StructType([
+        T.StructField("doc_id", T.StringType(), False),
+        T.StructField("val", T.LongType(), True),
+    ])
+    return LakeTable.create(str(tmp_path / "t"), payload, n_buckets=n_buckets)
+
+
+def _random_epoch(rng, rev, n_keys=60, n_events=30):
+    """One epoch of seeded upserts and deletes, one row per key, revs
+    from ``rev + 1``."""
+    keys = rng.sample(range(n_keys), n_events)
+    return [(f"k{k:03d}", rng.randrange(1000), rev + i + 1,
+             rng.random() < 0.2) for i, k in enumerate(keys)]
+
+
+_KV_DDL = "doc_id string, val long, _rev long, _deleted boolean"
+
+
+def _append(spark, table, rows, epoch, ddl=_KV_DDL):
+    table.append_delta(spark.createDataFrame(rows, ddl), epoch_id=epoch)
+
+
+def test_manifest_cache_holds_the_head_and_a_bounded_lru(tmp_path):
+    """Parsed manifests stay bounded however long the version chain
+    grows (no Spark: metadata-only commits), and an evicted version
+    reads back equal to its file."""
+    import json
+
+    from pyspark.sql import types as T
+
+    from bitcoin_etl_spark.lake.table import _MANIFEST_LRU
+
+    table = LakeTable.create(str(tmp_path / "t"), T.StructType(
+        [T.StructField("doc_id", T.StringType(), False)]))
+    for epoch in range(300):
+        nm = table._next_manifest("append-delta")
+        nm["files"].append({"path": f"data/d{epoch}.parquet", "bucket": None,
+                            "rows": 1, "rev_min": epoch, "rev_max": epoch})
+        nm["ledger"].setdefault("p", {})[str(epoch)] = {"rows": 1}
+        table._publish(nm)
+        table.committed_epochs("p")
+        assert len(table._manifest_cache) <= _MANIFEST_LRU
+    assert table.manifest()["version"] == 300
+    assert 3 not in table._manifest_cache
+    with open(tmp_path / "t" / "manifest" / "v3.json") as f:
+        assert table.manifest(3) == json.load(f)
+    assert table.manifest()["version"] == 300
+    assert table.rev_high(200) == 199
+    assert len(table._manifest_cache) <= _MANIFEST_LRU
+
+
+def test_classified_feed_runs_one_aggregate(spark, tmp_path):
+    """An in-order classified increment over a compacted base plus
+    deltas runs at most one Spark job more than the unclassified scan of
+    the same range, and its plan dedups no from-state (no Window)."""
+    import random
+    import uuid
+
+    rng = random.Random(7)
+    table = _kv_table(tmp_path)
+    rev = 0
+    for e in range(3):
+        rows = _random_epoch(rng, rev)
+        _append(spark, table, rows, e)
+        rev += len(rows)
+    table.compact(spark)
+    for e in range(3, 5):
+        rows = _random_epoch(rng, rev)
+        _append(spark, table, rows, e)
+        rev += len(rows)
+    v = table.current_version()
+    _append(spark, table, _random_epoch(rng, rev), 5)
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    settle = sc._jsc.sc().listenerBus().waitUntilEmpty
+
+    def jobs(classify):
+        group = f"feed-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "feed count")
+        try:
+            feed = table.read_changes(spark, v, classify=classify)
+            n = feed.count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        settle()
+        return n, len(tracker.getJobIdsForGroup(group)), feed
+
+    n_flat, flat_jobs, _ = jobs(False)
+    n_classified, classified_jobs, feed = jobs(True)
+    assert 0 < n_classified <= n_flat
+    assert classified_jobs <= flat_jobs + 1, (classified_jobs, flat_jobs)
+    plan = feed._jdf.queryExecution().optimizedPlan().toString()
+    assert "Window" not in plan, plan
+
+
+def test_in_order_feed_matches_snapshot_diff_across_maintenance(spark,
+                                                                tmp_path):
+    """The in-order feed (new rows plus the changed keys' prior rows)
+    equals the out-of-order snapshot diff over ranges that hold an
+    append, a minor compaction (bucketed new files: the bucket prune),
+    a full compaction, a further append and an additive schema
+    evolution."""
+    import random
+
+    rng = random.Random(11)
+    table = _kv_table(tmp_path)
+    rev = 0
+
+    def epoch(e, ddl=_KV_DDL, extra=()):
+        nonlocal rev
+        rows = [r + extra for r in _random_epoch(rng, rev)]
+        _append(spark, table, rows, e, ddl)
+        rev += len(rows)
+
+    for e in range(3):
+        epoch(e)
+    table.compact(spark)
+    epoch(3)
+    v_a = table.current_version()
+    heads = []
+    epoch(4)
+    heads.append(table.current_version())
+    assert table.compact_deltas(spark)["compacted"]
+    heads.append(table.current_version())
+    epoch(5)
+    assert table.compact(spark)["compacted"]
+    heads.append(table.current_version())
+    epoch(6)
+    heads.append(table.current_version())
+    epoch(7, _KV_DDL + ", tag string", ("t",))
+    heads.append(table.current_version())
+    assert "tag" in table.payload_schema().names
+
+    rev_a = table.rev_high(v_a)
+    minor = [f for f in table.manifest(heads[1])["files"]
+             if f.get("rev_max") is None or f["rev_max"] > rev_a]
+    assert minor and all(f["bucket"] is not None for f in minor)
+
+    def rows(frame):
+        return sorted(tuple(r) for r in frame.collect())
+
+    in_order = {v: rows(table.read_changes(spark, v_a, v)) for v in heads}
+    table._min_appended_rev = lambda *a: -(1 << 62)
+    for v in heads:
+        assert in_order[v] == rows(table.read_changes(spark, v_a, v)), v
+    assert in_order[heads[-1]]
+
+
+def test_in_order_feed_after_key_widening(spark, tmp_path):
+    """Files bucketed under an int key keep their int-hash buckets after
+    the key widens to long: the in-order feed must still find the prior
+    rows of keys that bucketed new files change."""
+    from pyspark.sql import types as T
+
+    table = LakeTable.create(str(tmp_path / "t"), T.StructType([
+        T.StructField("k", T.IntegerType(), False),
+        T.StructField("val", T.LongType(), True),
+    ]), key="k", n_buckets=8)
+    ddl = "k {}, val long, _rev long, _deleted boolean"
+    _append(spark, table, [(i, i, i + 1, False) for i in range(40)], 0,
+            ddl.format("int"))
+    table.compact(spark)
+    _append(spark, table, [(100, 1, 100, False)], 1, ddl.format("long"))
+    v = table.current_version()
+    _append(spark, table, [(i, i, 200 + i, False) for i in range(10)], 2,
+            ddl.format("long"))
+    assert table.compact_deltas(spark)["compacted"]
+    feed = {r["k"]: r["_change_type"]
+            for r in table.read_changes(spark, v).collect()}
+    assert feed == {i: "UPDATE_AFTER" for i in range(10)}
+
+
 def test_point_lookup_prunes_by_bucket_and_key_range(spark, tmp_path):
     """Single-key read path: point_lookup must return the latest live
     image while scanning ONLY files admitted by the hash bucket and the
