@@ -71,8 +71,9 @@ BUCKET_COL = "_bucket"
 _MANIFEST_RE = re.compile(r"^v(\d+)\.json$")
 # append_delta re-plans its manifest on a lost publish race this often
 _COMMIT_RETRIES = 3
-# parsed manifests kept besides the head: enough for a feed range, a
-# time-travel read and the parent of the next commit, while driver
+# parsed manifests kept, least recently read evicted first: enough for
+# a feed range, a time-travel read and the parent of the next commit
+# (every commit reads the head, so it stays resident), while driver
 # memory stays flat however long the version chain grows
 _MANIFEST_LRU = 8
 
@@ -173,8 +174,6 @@ class LakeTable:
         self.n_buckets = n_buckets
         self._manifest_dir = os.path.join(path, "manifest")
         self._data_dir = os.path.join(path, "data")
-        # the highest version parsed so far, plus an LRU of others
-        self._head: dict | None = None
         self._manifest_cache: OrderedDict[int, dict] = OrderedDict()
         # writer contract: (key, _rev) pairs are globally unique (set via
         # the table property of the same name) — lets the broadcast-join
@@ -242,23 +241,16 @@ class LakeTable:
         v = self.current_version() if version is None else version
         if v is None:
             raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        head = self._head
-        if head is not None and head["version"] == v:
-            return head
         cache = self._manifest_cache
-        m = cache.pop(v, None)
-        if m is None:
-            with open(os.path.join(self._manifest_dir, f"v{v}.json")) as f:
-                m = json.load(f)
-        # a newer version becomes the head; the one it displaces goes to
-        # the LRU like any other version read
-        keep = m
-        if head is None or v > head["version"]:
-            self._head, keep = m, head
-        if keep is not None:
-            cache[keep["version"]] = keep
-            if len(cache) > _MANIFEST_LRU:
-                cache.popitem(last=False)
+        m = cache.get(v)
+        if m is not None:
+            cache.move_to_end(v)
+            return m
+        with open(os.path.join(self._manifest_dir, f"v{v}.json")) as f:
+            m = json.load(f)
+        cache[v] = m
+        if len(cache) > _MANIFEST_LRU:
+            cache.popitem(last=False)
         return m
 
     def _publish_root(self, schema: dict, files: list[dict], ledger: dict,
@@ -734,11 +726,9 @@ class LakeTable:
         * ``old`` — the ``from_version`` state's rows, projected to
           (key, ``_rev``, ``_deleted``). In order, only the rows of keys
           in ``new``: a left-semi join with no broadcast hint, so
-          Spark's own size estimate of the new files picks its plan;
-          and when every new file carries a bucket (e.g. after
-          ``compact_deltas``) and the key is not a long or double,
-          only the from-state files of those buckets plus the unbucketed
-          ones, decided from the manifests.
+          Spark's own size estimate of the new files picks its plan.
+          Every from-state file is read: the semi join already limits
+          ``old`` to the changed keys.
         ``groupBy(key)`` over ``new ∪ old`` then takes each key's newest
         new row and its newest old ``(_rev, _deleted)``. No before-state
         dedup runs first: a per-key max commutes with a key filter, so
@@ -769,9 +759,8 @@ class LakeTable:
         rev_a = self.rev_high(from_version)
         lo = self._min_appended_rev(from_version, m_to["version"])
         ex = _feed_exprs(tuple(schema.names), self.key, classify)
-        m_from = self.manifest(from_version)
+        old_files = self.manifest(from_version)["files"]
         schema_from = self.schema(from_version)
-        old_files = m_from["files"]
         if lo is None or lo > rev_a:  # in order
             cand = [
                 f for f in m_to["files"]
@@ -783,19 +772,6 @@ class LakeTable:
             if not classify:
                 return last_event_wins(new, self.key, REV_COL).select(
                     *ex.scan_out)
-            # a key's bucket is fixed by the bucket count and the key
-            # type, so a bucketed new file's keys live only in from-state
-            # files of its bucket or in unbucketed ones. Not so for a
-            # long or double key: widening from int or float changes its
-            # xxhash64, and files bucketed before the widening may remain
-            buckets = {f.get("bucket") for f in cand}
-            if (None not in buckets
-                    and m_from["n_buckets"] == m_to["n_buckets"]
-                    and not isinstance(schema[self.key].dataType,
-                                       (T.LongType, T.DoubleType))):
-                old_files = [f for f in old_files
-                             if f.get("bucket") is None
-                             or f["bucket"] in buckets]
             new = new.select(*ex.new)
             old = self._read_files(spark, old_files, schema_from).select(
                 *ex.old).join(new.select(self.key), self.key, "left_semi")

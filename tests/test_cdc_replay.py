@@ -954,7 +954,7 @@ def test_in_order_feed_matches_snapshot_diff_across_maintenance(spark,
                                                                 tmp_path):
     """The in-order feed (new rows plus the changed keys' prior rows)
     equals the out-of-order snapshot diff over ranges that hold an
-    append, a minor compaction (bucketed new files: the bucket prune),
+    append, a minor compaction (bucketed new files),
     a full compaction, a further append and an additive schema
     evolution."""
     import random
