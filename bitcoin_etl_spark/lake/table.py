@@ -78,6 +78,35 @@ _COMMIT_RETRIES = 3
 _MANIFEST_LRU = 8
 
 
+def _fits_one_partition(df: DataFrame) -> bool:
+    """Whether Spark's own size estimate of ``df`` — the one
+    ``JoinSelection`` compares with ``spark.sql.autoBroadcastJoinThreshold``
+    — is at most that threshold (``-1``: never). Such an input is read
+    into one partition (``coalesce(1)``): ``SinglePartition`` satisfies
+    every clustered distribution, so a keyed aggregate over it plans no
+    exchange, and a small increment runs as one Spark job instead of a
+    shuffle map job plus AQE's re-planned stages. A frame with no
+    estimate (RDD-backed) reports Spark's default size, which is huge,
+    so it keeps the shuffle."""
+    limit = (df.sparkSession._jsparkSession.sessionState().conf()
+             .autoBroadcastJoinThreshold())
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return 0 <= limit and size <= limit
+
+
+def _hashed_bucket(f: dict, key_type: str) -> int | None:
+    """File entry ``f``'s bucket id while its keys were hashed under the
+    table's current key type (``key_type``, the schema JSON type name),
+    else None. A widened key hashes differently (xxhash64 of an int is
+    not that of the same long), so a file bucketed before the widening
+    can hold keys of any current bucket: every bucket rule treats it as
+    unbucketed. Entries written before ``key_type`` was recorded count
+    as hashed under the current type."""
+    if f.get("key_type", key_type) != key_type:
+        return None
+    return f.get("bucket")
+
+
 @lru_cache(maxsize=64)
 def _latest_exprs(columns: tuple[str, ...], key: str,
                   seq: str) -> tuple[Column, tuple[Column, ...]]:
@@ -108,9 +137,13 @@ def last_event_wins(df: DataFrame, key: str = "doc_id",
     partition *before* the shuffle — a Zipf-hot key contributes one row
     per upstream partition instead of flooding a single window
     partition. That plus AQE skew-join splitting for the residual
-    shuffle is the engine's skew defense (SURVEY.md §4).
+    shuffle is the engine's skew defense (SURVEY.md §4). An input that
+    ``_fits_one_partition`` is aggregated in one partition, with no
+    shuffle at all.
     """
     agg, out = _latest_exprs(tuple(df.columns), key, seq)
+    if _fits_one_partition(df):
+        df = df.coalesce(1)
     return df.groupBy(key).agg(agg).select(*out)
 
 
@@ -401,14 +434,17 @@ class LakeTable:
           keys) pass through a small safety dedup.
         * ``window`` — one key-hash exchange → sort → row_number: no
           broadcast collect/build and no count sync.
-        An unbucketed delta's rows span every bucket, so it sends every
-        file through the dedup."""
-        dirty = {f.get("bucket") for f in files if f.get("kind") != "base"}
-        if None in dirty:
+        An unbucketed delta's rows span every bucket, and so do a file's
+        bucketed under a key type since widened (``_hashed_bucket``), so
+        either sends every file through the dedup."""
+        kt = schema[self.key].dataType.jsonValue()
+        buckets = [_hashed_bucket(f, kt) for f in files]
+        dirty = {b for f, b in zip(files, buckets) if f.get("kind") != "base"}
+        if None in buckets:
             clean, rest = [], files
         else:
-            clean = [f for f in files if f["bucket"] not in dirty]
-            rest = [f for f in files if f["bucket"] in dirty]
+            clean = [f for f, b in zip(files, buckets) if b not in dirty]
+            rest = [f for f, b in zip(files, buckets) if b in dirty]
         df = self._read_files(spark, clean, schema)
         if rest:
             latest = self._dedup_latest(spark, rest, schema, keys_bound)
@@ -501,11 +537,14 @@ class LakeTable:
         """Files that can possibly contain ``value``: bucket-pruned
         (a bucketed file only holds its bucket's keys) then key-range
         pruned from the manifest's footer min/max stats (the Iceberg
-        lower/upper-bounds skip). Unbucketed or stats-less files are
-        always candidates (never silently skipped)."""
+        lower/upper-bounds skip). Unbucketed or stats-less files, and
+        files bucketed under a key type since widened, are always
+        candidates (never silently skipped)."""
+        kt = self.schema(version)[self.key].dataType.jsonValue()
         out = []
         for f in self.manifest(version)["files"]:
-            if f.get("bucket") is not None and f["bucket"] != bucket:
+            b = _hashed_bucket(f, kt)
+            if b is not None and b != bucket:
                 continue
             if "key_min" in f and not (f["key_min"] <= value <= f["key_max"]):
                 continue
@@ -575,7 +614,8 @@ class LakeTable:
         """Write df under data/<subdir>/ and return manifest file entries.
 
         ``by_bucket=True`` writes one directory per key-hash bucket
-        (partitionBy) so entries carry a bucket id for pruning.
+        (partitionBy) so entries carry a bucket id, and the key type it
+        was hashed under, for pruning.
         ``shuffle=False`` replaces the bucket repartition with a narrow
         ``coalesce`` — for callers whose frame is ALREADY key-hash
         partitioned (e.g. the compaction dedup output): every row of a
@@ -585,6 +625,8 @@ class LakeTable:
         layout already supports).
         """
         out_dir = os.path.join(self._data_dir, subdir)
+        key_type = df.schema[self.key].dataType.jsonValue() if by_bucket \
+            else None
         if by_bucket:
             # Writer-task cap: repartition to min(cap, n_buckets) tasks,
             # each writing its buckets' dirs sequentially via partitionBy
@@ -623,11 +665,11 @@ class LakeTable:
                     continue
                 full = os.path.join(root, name)
                 rel = os.path.relpath(full, self.path)
-                bucket = None
+                e = {"path": rel, "bucket": None, "rows": None}
                 mb = re.search(rf"{BUCKET_COL}=(\d+)", rel)
                 if mb:
-                    bucket = int(mb.group(1))
-                entries.append({"path": rel, "bucket": bucket, "rows": None})
+                    e.update(bucket=int(mb.group(1)), key_type=key_type)
+                entries.append(e)
         return entries
 
     @staticmethod
@@ -711,9 +753,15 @@ class LakeTable:
             from files whose footer ``_rev`` range reaches above it
             (compaction rewrites carry old revs and are skipped
             entirely, so the scan is proportional to NEW data, not table
-            size). ``classify=False`` returns ``last_event_wins`` of this
-            single scan as the feed (a never-alive delete then still
-            surfaces as DELETE).
+            size). The ``_rev > rev_high(from_version)`` row filter is
+            kept only when some such file lacks a footer ``rev_min`` or
+            reaches down to the bound (a compaction rewrite inside the
+            range); otherwise it is a no-op and left out, so consecutive
+            increments plan the same generated code (Spark writes the
+            bound into the code as a literal) and its cache serves them.
+            ``classify=False`` returns ``last_event_wins`` of this single
+            scan as the feed (a never-alive delete then still surfaces
+            as DELETE).
           - Out of order: every row of the ``to_version`` state.
             Patch-by-replay of a withheld epoch writes rows at their
             ORIGINAL low seq as ``_rev``: it can insert brand-new keys
@@ -723,12 +771,17 @@ class LakeTable:
             added (``appended_rev_min``); when any commit in
             ``(from, to]`` appended revs ≤ ``rev_high(from_version)``,
             the whole state is compared (correct for any rev order).
-        * ``old`` — the ``from_version`` state's rows, projected to
-          (key, ``_rev``, ``_deleted``). In order, only the rows of keys
-          in ``new``: a left-semi join with no broadcast hint, so
-          Spark's own size estimate of the new files picks its plan.
-          Every from-state file is read: the semi join already limits
-          ``old`` to the changed keys.
+        * ``old`` — every ``from_version`` file's rows, projected to
+          (key, ``_rev``, ``_deleted``).
+        The plan depends on Spark's size estimate of ``new ∪ old``. At
+        most ``spark.sql.autoBroadcastJoinThreshold``
+        (``_fits_one_partition``), the union is read into one partition
+        and aggregated there: no exchange, one Spark job, and the new
+        files are scanned once. Above it, in order, ``old`` is first
+        left-semi-joined to ``new``'s keys (no broadcast hint, so
+        Spark's own estimate picks the join), so only the changed keys'
+        rows reach the shuffle; out of order, the union is shuffled as
+        it is.
         ``groupBy(key)`` over ``new ∪ old`` then takes each key's newest
         new row and its newest old ``(_rev, _deleted)``. No before-state
         dedup runs first: a per-key max commutes with a key filter, so
@@ -761,28 +814,32 @@ class LakeTable:
         ex = _feed_exprs(tuple(schema.names), self.key, classify)
         old_files = self.manifest(from_version)["files"]
         schema_from = self.schema(from_version)
-        if lo is None or lo > rev_a:  # in order
+        in_order = lo is None or lo > rev_a
+        if in_order:
             cand = [
                 f for f in m_to["files"]
                 if f.get("rev_max") is None or f["rev_max"] > rev_a
             ]
-            new = self._read_files(spark, cand, schema).filter(
-                F.col(REV_COL) > rev_a
-            )
+            new = self._read_files(spark, cand, schema)
+            if any(f.get("rev_min") is None or f["rev_min"] <= rev_a
+                   for f in cand):
+                new = new.filter(F.col(REV_COL) > rev_a)
             if not classify:
                 return last_event_wins(new, self.key, REV_COL).select(
                     *ex.scan_out)
-            new = new.select(*ex.new)
-            old = self._read_files(spark, old_files, schema_from).select(
-                *ex.old).join(new.select(self.key), self.key, "left_semi")
         else:
-            new = self._read_files(spark, m_to["files"], schema).select(
-                *ex.new)
-            old = self._read_files(spark, old_files, schema_from).select(
-                *ex.old)
+            new = self._read_files(spark, m_to["files"], schema)
+        new = new.select(*ex.new)
+        old = self._read_files(spark, old_files, schema_from).select(*ex.old)
+        rows = new.unionByName(old, allowMissingColumns=True)
+        if _fits_one_partition(rows):
+            rows = rows.coalesce(1)
+        elif in_order:
+            rows = new.unionByName(
+                old.join(new.select(self.key), self.key, "left_semi"),
+                allowMissingColumns=True)
         return (
-            new.unionByName(old, allowMissingColumns=True)
-            .groupBy(self.key).agg(*ex.agg)
+            rows.groupBy(self.key).agg(*ex.agg)
             .where(ex.keep)
             .select(*ex.out)
         )
@@ -1131,6 +1188,8 @@ class LakeTable:
         table needs (never a full rewrite; each bucket compacts on its
         own schedule). Unbucketed deltas are folded first
         (``compact_deltas``) so the subset's rows are self-contained.
+        While any file is bucketed under a key type since widened
+        (``_hashed_bucket``), no subset is: the whole table is rewritten.
 
         ``new_n_buckets`` evolves the bucket count (grow when per-bucket
         size outruns executor memory) — a FULL rewrite by definition
@@ -1146,6 +1205,10 @@ class LakeTable:
         if buckets is not None:
             self.compact_deltas(spark)
         m = self.manifest()
+        kt = self.schema()[self.key].dataType.jsonValue()
+        if buckets is not None and any(
+                _hashed_bucket(f, kt) is None for f in m["files"]):
+            buckets = None  # a widened key: no bucket is self-contained
         if buckets is None:
             target = list(m["files"])
         else:

@@ -15,19 +15,22 @@ commit per epoch:
 Reorg rollbacks need no special path: compensation D events become
 tombstones with higher ``_rev`` than the rows they kill (C4/C5 analog).
 
-Cost model, per epoch: the delta write is one Spark job, or two with
-``pre_reduce`` (AQE runs the reduction's shuffle map stage as its own
-job). Validation/reduction stats ride the delta-write action as
+Cost model, per epoch: the delta write is one Spark job. With
+``pre_reduce``, an epoch whose size estimate is above the one-partition
+bound (``spark.sql.autoBroadcastJoinThreshold``, see
+``last_event_wins``) adds one: AQE runs the reduction's shuffle map
+stage as its own job. A small epoch is reduced in one partition, inside
+the write job. Validation/reduction stats ride the delta-write action as
 ``Observation`` metrics (the ``observe()`` analog of the reference's
 AtomicCounter sink metrics, A7/T8 — ``composite_item_exporter.py:70-79``)
 instead of separate count jobs. Quarantine is ``eager`` or ``lazy``:
 
-* ``eager`` writes the epoch's bad rows as one more job, so an eager,
-  pre-reduced epoch runs 3 jobs. That job runs on a background thread
-  alongside the delta write (keeping the caller's job group) and is
-  joined before the manifest publish: an epoch enters the ledger only
-  once its bad rows are durable, and a failed quarantine write fails
-  the commit.
+* ``eager`` writes the epoch's bad rows as one more job, so a small
+  eager, pre-reduced epoch runs 2 jobs (3 above the bound). That job
+  runs on a background thread alongside the delta write (keeping the
+  caller's job group) and is joined before the manifest publish: an
+  epoch enters the ledger only once its bad rows are durable, and a
+  failed quarantine write fails the commit.
 * ``lazy`` writes nothing: bad rows remain derivable from the change log
   via ``scan_quarantine``, and their count rides the delta write.
 

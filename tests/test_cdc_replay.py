@@ -299,8 +299,9 @@ def test_eager_quarantine_jobs_keep_the_callers_job_group(spark, tmp_path):
         sc.setLocalProperty("spark.job.description", None)
     settle()
     assert res["quarantined"] > 0
-    # quarantine write + the pre-reduced delta write's map and result jobs
-    assert len(tracker.getJobIdsForGroup(group)) == 3
+    # quarantine write + the delta write: the small epoch's pre-reduce
+    # runs in one partition, so it adds no shuffle map job
+    assert len(tracker.getJobIdsForGroup(group)) == 2
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
 
 
@@ -875,6 +876,34 @@ def _append(spark, table, rows, epoch, ddl=_KV_DDL):
     table.append_delta(spark.createDataFrame(rows, ddl), epoch_id=epoch)
 
 
+def _run_grouped(spark, fn):
+    """``fn()``'s result, the number of Spark jobs it ran and the
+    number of generated-code compilations it triggered."""
+    import uuid
+
+    sc = spark.sparkContext
+    codegen = sc._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount
+    group = f"probe-{uuid.uuid4().hex[:8]}"
+    c0 = compiled()
+    sc.setJobGroup(group, "probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return (out, len(sc.statusTracker().getJobIdsForGroup(group)),
+            compiled() - c0)
+
+
+def _rule_off(monkeypatch):
+    """Force every input above the one-partition bound."""
+    from bitcoin_etl_spark.lake import table as table_mod
+
+    monkeypatch.setattr(table_mod, "_fits_one_partition", lambda df: False)
+
+
 def test_manifest_cache_holds_the_head_and_a_bounded_lru(tmp_path):
     """Parsed manifests stay bounded however long the version chain
     grows (no Spark: metadata-only commits), and an evicted version
@@ -904,12 +933,14 @@ def test_manifest_cache_holds_the_head_and_a_bounded_lru(tmp_path):
     assert len(table._manifest_cache) <= _MANIFEST_LRU
 
 
-def test_classified_feed_runs_one_aggregate(spark, tmp_path):
+def test_classified_feed_runs_one_aggregate(spark, tmp_path, monkeypatch):
     """An in-order classified increment over a compacted base plus
-    deltas runs at most one Spark job more than the unclassified scan of
-    the same range, and its plan dedups no from-state (no Window)."""
+    deltas dedups no from-state (no Window). Below the one-partition
+    bound it runs as one Spark job, and the next increment compiles no
+    new code (the no-op ``_rev`` filter is left out). Above the bound
+    it keeps its left-semi join and runs at most one job more than the
+    unclassified scan of the same range."""
     import random
-    import uuid
 
     rng = random.Random(7)
     table = _kv_table(tmp_path)
@@ -924,39 +955,43 @@ def test_classified_feed_runs_one_aggregate(spark, tmp_path):
         _append(spark, table, rows, e)
         rev += len(rows)
     v = table.current_version()
-    _append(spark, table, _random_epoch(rng, rev), 5)
+    rows = _random_epoch(rng, rev)
+    _append(spark, table, rows, 5)
+    rev += len(rows)
 
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    settle = sc._jsc.sc().listenerBus().waitUntilEmpty
+    def count(from_v, classify=True):
+        feed = table.read_changes(spark, from_v, from_v + 1,
+                                  classify=classify)
+        n, jobs, compiled = _run_grouped(spark, feed.count)
+        return n, jobs, compiled, feed._jdf.queryExecution().optimizedPlan(
+            ).toString()
 
-    def jobs(classify):
-        group = f"feed-{uuid.uuid4().hex[:8]}"
-        sc.setJobGroup(group, "feed count")
-        try:
-            feed = table.read_changes(spark, v, classify=classify)
-            n = feed.count()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        settle()
-        return n, len(tracker.getJobIdsForGroup(group)), feed
-
-    n_flat, flat_jobs, _ = jobs(False)
-    n_classified, classified_jobs, feed = jobs(True)
+    n_flat, flat_jobs, _, _ = count(v, classify=False)
+    n_classified, classified_jobs, _, plan = count(v)
     assert 0 < n_classified <= n_flat
-    assert classified_jobs <= flat_jobs + 1, (classified_jobs, flat_jobs)
-    plan = feed._jdf.queryExecution().optimizedPlan().toString()
-    assert "Window" not in plan, plan
+    assert (flat_jobs, classified_jobs) == (1, 1)
+    assert "Window" not in plan and "LeftSemi" not in plan, plan
+
+    _append(spark, table, _random_epoch(rng, rev), 6)
+    n_next, _, compiled, _ = count(v + 1)
+    assert n_next > 0 and compiled == 0, compiled
+
+    _rule_off(monkeypatch)
+    n_off, flat_jobs, _, _ = count(v, classify=False)
+    assert n_off == n_flat
+    n_wide, wide_jobs, _, plan = count(v)
+    assert n_wide == n_classified
+    assert wide_jobs <= flat_jobs + 1, (wide_jobs, flat_jobs)
+    assert "Window" not in plan and "LeftSemi" in plan, plan
 
 
-def test_in_order_feed_matches_snapshot_diff_across_maintenance(spark,
-                                                                tmp_path):
-    """The in-order feed (new rows plus the changed keys' prior rows)
-    equals the out-of-order snapshot diff over ranges that hold an
-    append, a minor compaction (bucketed new files),
-    a full compaction, a further append and an additive schema
-    evolution."""
+def _feed_across_maintenance(spark, tmp_path):
+    """Assert that the in-order feed (new rows plus the changed keys'
+    prior rows) equals the out-of-order snapshot diff over ranges that
+    hold an append, a minor compaction (bucketed new files), a full
+    compaction, a further append and an additive schema evolution.
+    Returns the in-order feeds' ``_rev > rev_high(v_a)`` filter use,
+    one flag per range."""
     import random
 
     rng = random.Random(11)
@@ -996,11 +1031,34 @@ def test_in_order_feed_matches_snapshot_diff_across_maintenance(spark,
     def rows(frame):
         return sorted(tuple(r) for r in frame.collect())
 
-    in_order = {v: rows(table.read_changes(spark, v_a, v)) for v in heads}
+    feeds = {v: table.read_changes(spark, v_a, v) for v in heads}
+    filtered = [f"> {rev_a})" in feeds[v]._jdf.queryExecution()
+                .optimizedPlan().toString() for v in heads]
+    in_order = {v: rows(feeds[v]) for v in heads}
     table._min_appended_rev = lambda *a: -(1 << 62)
     for v in heads:
         assert in_order[v] == rows(table.read_changes(spark, v_a, v)), v
     assert in_order[heads[-1]]
+    return filtered
+
+
+def test_in_order_feed_matches_snapshot_diff_across_maintenance(spark,
+                                                                tmp_path):
+    """The one-partition plan (every table here is below the bound)
+    against the snapshot diff. The ``_rev`` row filter is left out only
+    where every new file lies wholly above the cursor: the minor
+    compaction rewrites pre-cursor deltas and the full one every row."""
+    assert _feed_across_maintenance(spark, tmp_path) == [
+        False, True, True, True, True]
+
+
+def test_in_order_feed_matches_snapshot_diff_above_the_bound(
+        spark, tmp_path, monkeypatch):
+    """The left-semi-join plan, taken above the one-partition bound,
+    against the snapshot diff over the same ranges."""
+    _rule_off(monkeypatch)
+    assert _feed_across_maintenance(spark, tmp_path) == [
+        False, True, True, True, True]
 
 
 def test_in_order_feed_after_key_widening(spark, tmp_path):
@@ -1025,6 +1083,42 @@ def test_in_order_feed_after_key_widening(spark, tmp_path):
     feed = {r["k"]: r["_change_type"]
             for r in table.read_changes(spark, v).collect()}
     assert feed == {i: "UPDATE_AFTER" for i in range(10)}
+
+
+def test_bucket_rules_after_key_widening(spark, tmp_path):
+    """Files bucketed under an int key hold int-hash buckets, which a
+    widened long key no longer matches: lookups, ``read_final`` and a
+    bucket-subset compaction must treat them as unbucketed."""
+    from pyspark.sql import types as T
+
+    table = LakeTable.create(str(tmp_path / "t"), T.StructType([
+        T.StructField("k", T.IntegerType(), False),
+        T.StructField("val", T.LongType(), True),
+    ]), key="k", n_buckets=8)
+    ddl = "k {}, val long, _rev long, _deleted boolean"
+    _append(spark, table, [(i, i, i + 1, False) for i in range(40)], 0,
+            ddl.format("int"))
+    table.compact(spark)
+    _append(spark, table, [(100, 1, 100, False)], 1, ddl.format("long"))
+    assert [(r["k"], r["val"]) for r in table.point_lookup(spark, 5)
+            .collect()] == [(5, 5)]
+
+    _append(spark, table, [(i, 1000 + i, 200 + i, False) for i in range(10)],
+            2, ddl.format("long"))
+    assert table.compact_deltas(spark)["compacted"]
+    want = {**{i: i for i in range(40)}, **{i: 1000 + i for i in range(10)},
+            100: 1}
+    final = [(r["k"], r["val"]) for r in table.read_final(spark).collect()]
+    assert len(final) == len(want) and dict(final) == want
+    assert [r["val"] for r in table.point_lookup(spark, 5).collect()] == [1005]
+    assert [r["val"] for r in table.point_lookup(spark, 20).collect()] == [20]
+
+    table.compact(spark, buckets={0})
+    m = table.manifest()
+    assert m["operation"] == "compact"
+    assert {f["key_type"] for f in m["files"]} == {"long"}
+    final = [(r["k"], r["val"]) for r in table.read_final(spark).collect()]
+    assert len(final) == len(want) and dict(final) == want
 
 
 def test_point_lookup_prunes_by_bucket_and_key_range(spark, tmp_path):
@@ -1057,8 +1151,11 @@ def test_point_lookup_prunes_by_bucket_and_key_range(spark, tmp_path):
     m = table.manifest()
     assert all("key_min" in f for f in m["files"] if f["rows"]), m["files"]
 
-    got = table.point_lookup(spark, "k007").collect()
+    got, jobs, _ = _run_grouped(
+        spark, lambda: table.point_lookup(spark, "k007").collect())
     assert len(got) == 1 and got[0]["val"] == 778 and got[0]["_rev"] == 102
+    # the key's bucket hash, then the pruned read in one partition
+    assert jobs == 2, jobs
     assert table.point_lookup(spark, "k009").count() == 0  # deleted
     assert table.point_lookup(spark, "nope").count() == 0  # absent
     ref = _reference_final(spark, table)
