@@ -13,18 +13,17 @@ the same contract on plain parquet + an atomic JSON manifest chain:
   tombstone rows (``_deleted=true``) — merge-on-read, like RMT parts.
 * **Read-time finality** — ``read_final()`` is the ``SELECT … FINAL``
   analog (reference ``pipelines/block_sync_pipeline.py:269-291``): the
-  max-``_rev`` row per key, tombstones dropped. One rule,
-  ``_dedup_plan``, picks one of two plans from manifest statistics
-  alone: a broadcast semi-join against the narrow ``(key, max(_rev))``
-  winner set while the winner bound fits the broadcast budget and the
-  parallelism, else one key-hash window. ``last_event_wins`` (max_by —
-  map-side partial aggregation collapses hot keys *before* the shuffle,
-  the skew mitigation SURVEY.md §4 calls for) is the same rule for
-  small pre-pruned frames and the reference tests pin both plans to.
+  max-``_rev`` row per key, tombstones dropped, by one plan
+  (``_dedup_latest``): a key-hash window ordered by ``_rev`` desc.
+  ``last_event_wins`` (max_by — map-side partial aggregation collapses
+  hot keys *before* the shuffle, the skew mitigation SURVEY.md §4 calls
+  for) is the same rule for small pre-pruned frames and the reference
+  the tests pin the window to.
 * **Explicit compaction** — ``compact()`` is the ``OPTIMIZE TABLE …
   FINAL`` analog (reference ``clickhouse/clickhouse_final_block_partition
   .py:61-76``): folds all delta files into hash-bucketed base files
-  through the same plan decision, recorded in the commit.
+  through the same window, whose key-hash output the bucket write
+  keeps without a second exchange.
 * **Atomic commits + snapshot isolation** — each commit writes data files
   then publishes manifest ``v{N}.json`` via an exclusive hard-link (POSIX
   ``link(2)`` fails if the target exists → optimistic concurrency).
@@ -60,7 +59,9 @@ from collections import OrderedDict
 from functools import lru_cache
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import (
+    Column, DataFrame, SparkSession, Window, functions as F, types as T,
+)
 
 from ..schemas import merge_schemas, schema_from_json
 
@@ -208,10 +209,6 @@ class LakeTable:
         self._manifest_dir = os.path.join(path, "manifest")
         self._data_dir = os.path.join(path, "data")
         self._manifest_cache: OrderedDict[int, dict] = OrderedDict()
-        # writer contract: (key, _rev) pairs are globally unique (set via
-        # the table property of the same name) — lets the broadcast-join
-        # dedup skip its winner-sized safety shuffle
-        self.assume_unique_rev = False
 
     # ------------------------------------------------------------------ setup
     @classmethod
@@ -231,11 +228,7 @@ class LakeTable:
         if t.current_version() is not None:
             raise ValueError(f"table already exists at {path}")
         full = cls._with_engine_cols(schema)
-        t.assume_unique_rev = bool(
-            (properties or {}).get("assume_unique_rev", False)
-        )
-        t._publish_root(json.loads(full.json()), [], {}, properties or {},
-                        keys_bound=0)
+        t._publish_root(json.loads(full.json()), [], {}, properties or {})
         return t
 
     @classmethod
@@ -244,9 +237,6 @@ class LakeTable:
         m = t.manifest()
         t.key = m["key"]
         t.n_buckets = m["n_buckets"]
-        t.assume_unique_rev = bool(
-            m.get("properties", {}).get("assume_unique_rev", False)
-        )
         return t
 
     @staticmethod
@@ -287,7 +277,7 @@ class LakeTable:
         return m
 
     def _publish_root(self, schema: dict, files: list[dict], ledger: dict,
-                      properties: dict, keys_bound: int | None,
+                      properties: dict,
                       operation: str | None = None) -> None:
         """Publish v0, the root of a new manifest chain."""
         self._publish({
@@ -299,7 +289,6 @@ class LakeTable:
             "files": files,
             "ledger": ledger,
             "properties": properties,
-            "keys_bound": keys_bound,
             "committed_at": time.time(),
             "operation": operation,
         })
@@ -388,7 +377,13 @@ class LakeTable:
         self, spark: SparkSession, files: list[dict], schema: T.StructType
     ) -> DataFrame:
         if not files:
-            return spark.createDataFrame([], schema)
+            # typed nulls over an empty range: Spark sizes this at a few
+            # bytes, where createDataFrame([]) is RDD-backed and reports
+            # its huge default, failing every _fits_one_partition it joins
+            return spark.range(0).select(*[
+                F.lit(None).cast(f.dataType).alias(f.name)
+                for f in schema.fields
+            ])
         paths = [os.path.join(self.path, f["path"]) for f in files]
         # recursiveFileLookup disables hive partition inference so mixed
         # snapshot dir layouts never surface phantom partition columns;
@@ -412,13 +407,11 @@ class LakeTable:
     ) -> DataFrame:
         """Latest row image per key, tombstones dropped — ``FINAL``:
         ``_final`` over the snapshot's files."""
-        m = self.manifest(version)
-        return self._final(spark, m["files"], self.schema(version),
-                           m.get("keys_bound"))
+        return self._final(spark, self.manifest(version)["files"],
+                           self.schema(version))
 
     def _final(self, spark: SparkSession, files: list[dict],
-               schema: T.StructType,
-               keys_bound: int | None) -> DataFrame:
+               schema: T.StructType) -> DataFrame:
         """Latest live row image per key over ``files``.
 
         Base files in buckets no delta touches are already
@@ -426,17 +419,10 @@ class LakeTable:
         plans no dedup at all, and after PARTIAL compaction the
         merge-on-read cost stays proportional to the uncompacted
         fraction, not the table. Every other file goes through
-        ``_dedup_latest``, whose ``_dedup_plan`` picks from manifest
-        statistics alone (no job, no driver sync):
-        * ``join`` — hash-aggregate the NARROW ``(key, max(_rev))``
-          winner set, then broadcast-semi-join it back: the wide rows
-          are never shuffled or sorted; only the winner rows (≤ live
-          keys) pass through a small safety dedup.
-        * ``window`` — one key-hash exchange → sort → row_number: no
-          broadcast collect/build and no count sync.
-        An unbucketed delta's rows span every bucket, and so do a file's
-        bucketed under a key type since widened (``_hashed_bucket``), so
-        either sends every file through the dedup."""
+        ``_dedup_latest``. An unbucketed delta's rows span every bucket,
+        and so do a file's bucketed under a key type since widened
+        (``_hashed_bucket``), so either sends every file through the
+        dedup."""
         kt = schema[self.key].dataType.jsonValue()
         buckets = [_hashed_bucket(f, kt) for f in files]
         dirty = {b for f, b in zip(files, buckets) if f.get("kind") != "base"}
@@ -447,90 +433,28 @@ class LakeTable:
             rest = [f for f, b in zip(files, buckets) if b in dirty]
         df = self._read_files(spark, clean, schema)
         if rest:
-            latest = self._dedup_latest(spark, rest, schema, keys_bound)
+            latest = self._dedup_latest(spark, rest, schema)
             df = df.unionByName(latest) if clean else latest
         return df.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
 
-    @classmethod
-    def _dedup_plan(cls, files: list[dict], keys_bound: int | None,
-                    par: int) -> dict:
-        """The dedup plan for ``files`` and its inputs, decided from
-        manifest statistics only — no winner-count job, no driver sync.
-
-        ``rows`` (summed file rows) and ``keys_bound`` (the manifest's
-        running per-commit HLL distinct-key estimates, inflated 10% —
-        a 2-sigma margin over HLL's default 5% rsd) both upper-bound the
-        distinct winner count; ``bound`` is the tighter one. The
-        broadcast ``join`` needs the winners inside
-        ``_broadcast_winner_limit``, and it only pays off while
-        bound × par ≤ 2 × rows: its cost is serial-ish in the winner
-        count (driver collect + hash-relation build, shipped to every
-        executor), while the ``window`` plan spreads the wide-row
-        shuffle over ``par`` cores. Interleaved A/B at sf1.0 local[32]
-        (20.4M rows, 1.42M winners): join 6.3-21.2 s vs window
-        5.2-6.0 s; at 1-4 process-isolated executors with 1.1M winners
-        the join won ~2x — both regimes fall out of this rule.
-
-        Stats-less tables (``keys_bound is None`` — any append without a
-        distinct-key estimate, e.g. every ``TableMirror`` downstream
-        append until a full compaction) have ``bound == rows``, so the
-        rule picks ``window`` whenever ``par > 2``. That is intended:
-        with no evidence that rows collapse, never broadcast a
-        table-sized winner set."""
-        rows = sum(f["rows"] or 0 for f in files)
-        bound = rows
-        if keys_bound is not None:
-            bound = min(rows, int(keys_bound * 1.10) + 16)
-        plan = (
-            "join"
-            if bound <= cls._broadcast_winner_limit and bound * par <= 2 * rows
-            else "window"
-        )
-        return {"plan": plan, "rows": rows, "bound": bound, "par": par}
-
     def _dedup_latest(self, spark: SparkSession, files: list[dict],
-                      schema: T.StructType,
-                      keys_bound: int | None = None) -> DataFrame:
+                      schema: T.StructType) -> DataFrame:
         """Latest row image per key, tombstones KEPT (``_deleted`` flags
-        keys whose newest event is a delete)."""
-        df = self._read_files(spark, files, schema)
-        decision = self._dedup_plan(
-            files, keys_bound, spark.sparkContext.defaultParallelism
+        keys whose newest event is a delete): ONE hash exchange on the
+        key, sort, ``row_number`` by ``_rev`` desc. The window returns one
+        row per key by construction, so identical ``(key, _rev)`` rows of
+        a replayed delta need no second dedup. Map-side partial
+        aggregation (``last_event_wins``) is worth little here because
+        epoch deltas are already pre-reduced per key, and the output's
+        key-hash partitioning is what ``compact``'s bucket write
+        assumes."""
+        w = Window.partitionBy(self.key).orderBy(F.col(REV_COL).desc())
+        return (
+            self._read_files(spark, files, schema)
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
         )
-        if decision["plan"] == "window":
-            # ONE hash exchange on the key, sort, row_number — no
-            # broadcast collect/build, no second dedup shuffle. The
-            # window is partitioned (never the global-sort
-            # anti-pattern); map-side partial agg is worth little here
-            # because epoch deltas are already pre-reduced per key.
-            from pyspark.sql import Window as W
-
-            w = W.partitionBy(self.key).orderBy(F.col(REV_COL).desc())
-            return (
-                df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        winners = df.groupBy(self.key).agg(F.max(REV_COL).alias(REV_COL))
-        joined = df.join(F.broadcast(winners), [self.key, REV_COL], "left_semi")
-        # duplicate-delivery safety: identical (key, _rev) rows may
-        # exist across replayed delta files; tiny winner-sized dedup.
-        # Tables whose writer guarantees (key, _rev) uniqueness — the
-        # engine's own apply path does: the ledger makes epochs
-        # exactly-once and the change-log seq is unique — can set the
-        # assume_unique_rev property to skip this shuffle (the same
-        # source-uniqueness contract an Iceberg/Delta MERGE places on
-        # its source); the window plan never needs it (one row per key
-        # by construction).
-        if self.assume_unique_rev:
-            return joined
-        return joined.dropDuplicates([self.key, REV_COL])
-
-    # winners above this row estimate fall back to the shuffle plan
-    # (5M keys ≈ 200 MB broadcast — inside the default 1g driver-result
-    # / executor-broadcast budgets with 2x headroom; 10M was flagged as
-    # aggressive in round-1 review)
-    _broadcast_winner_limit = 5_000_000
 
     def _point_lookup_files(self, value: str, bucket: int,
                             version: int | None = None) -> list[dict]:
@@ -594,7 +518,7 @@ class LakeTable:
                                               version):
                 cand_paths[f["path"]] = f
         if not cand_paths:
-            return spark.createDataFrame([], schema).filter(
+            return self._read_files(spark, [], schema).filter(
                 ~F.col(DELETED_COL)
             ).drop(DELETED_COL)
         df = self._read_files(
@@ -604,18 +528,17 @@ class LakeTable:
         return latest.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
 
     # ---------------------------------------------------------------- writes
-    def _bucket_expr(self):
-        return F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.n_buckets))
-
     def _write_data(
-        self, df: DataFrame, subdir: str, by_bucket: bool,
+        self, df: DataFrame, subdir: str, n_buckets: int | None,
         shuffle: bool = True,
     ) -> list[dict]:
         """Write df under data/<subdir>/ and return manifest file entries.
 
-        ``by_bucket=True`` writes one directory per key-hash bucket
+        An ``n_buckets`` count writes one directory per key-hash bucket
         (partitionBy) so entries carry a bucket id, and the key type it
-        was hashed under, for pruning.
+        was hashed under, for pruning; ``None`` writes unbucketed files.
+        The count is the caller's, never the live attribute: it must be
+        the one the publishing manifest records.
         ``shuffle=False`` replaces the bucket repartition with a narrow
         ``coalesce`` — for callers whose frame is ALREADY key-hash
         partitioned (e.g. the compaction dedup output): every row of a
@@ -625,9 +548,9 @@ class LakeTable:
         layout already supports).
         """
         out_dir = os.path.join(self._data_dir, subdir)
-        key_type = df.schema[self.key].dataType.jsonValue() if by_bucket \
+        key_type = df.schema[self.key].dataType.jsonValue() if n_buckets \
             else None
-        if by_bucket:
+        if n_buckets:
             # Writer-task cap: repartition to min(cap, n_buckets) tasks,
             # each writing its buckets' dirs sequentially via partitionBy
             # — same per-bucket file layout (pruning unaffected), bounded
@@ -637,10 +560,11 @@ class LakeTable:
             # on a real cluster writers spread across nodes, so set
             # SPARK_GRAFT_MAX_WRITERS to executor count or higher.
             cap = int(os.environ.get("SPARK_GRAFT_MAX_WRITERS", "8"))
-            out = df.withColumn(BUCKET_COL, self._bucket_expr())
+            out = df.withColumn(BUCKET_COL, F.pmod(
+                F.xxhash64(F.col(self.key)), F.lit(n_buckets)))
             out = (
-                out.coalesce(min(cap, self.n_buckets)) if not shuffle
-                else out.repartition(min(cap, self.n_buckets), BUCKET_COL)
+                out.coalesce(min(cap, n_buckets)) if not shuffle
+                else out.repartition(min(cap, n_buckets), BUCKET_COL)
             )
             # near-free key clustering: the dynamic-partition writer
             # sorts each task's rows by the partition column anyway (to
@@ -887,11 +811,6 @@ class LakeTable:
             "files": list(m["files"]),
             "ledger": json.loads(json.dumps(m["ledger"])),
             "properties": dict(m["properties"]),
-            # running upper bound on the table's distinct keys (None =
-            # unknown, e.g. a pre-field table or a stats-less append);
-            # appends add their HLL estimate, full compaction resets it
-            # to the exact base row count
-            "keys_bound": m.get("keys_bound"),
             "committed_at": time.time(),
             "operation": operation,
         }
@@ -959,7 +878,7 @@ class LakeTable:
         schema = self.schema()
         aligned = self._align(df, schema)
         sub = f"delta-{uuid.uuid4().hex[:12]}"
-        entries = self._write_data(aligned, sub, by_bucket=False)
+        entries = self._write_data(aligned, sub, n_buckets=None)
         for e in entries:
             e["kind"] = "delta"
         self._count_rows(entries, self.path, key=self.key)
@@ -998,21 +917,6 @@ class LakeTable:
                     e["rev_max"] for e in entries
                     if e.get("rev_max") is not None and e["rows"]
                 )
-            # running distinct-key upper bound: this commit's HLL
-            # estimate (riding the write job as an Observation — zero
-            # extra cost) adds to the parent's bound. A stats-less
-            # append poisons the bound to None (unknown) until the next
-            # full compaction resets it to the exact base count. The
-            # sum of per-commit EXACT distincts upper-bounds the union;
-            # HLL carries ~2% relative error per term, so the consumer
-            # (_dedup_latest auto) inflates the bound by 10% before
-            # comparing it to the broadcast budget.
-            dk = extra.get("distinct_keys")
-            kb = nm.get("keys_bound")
-            nm["keys_bound"] = (
-                kb + int(dk) if (kb is not None and dk is not None)
-                else None
-            )
             if epoch_id is not None:
                 led = nm["ledger"].setdefault(pipeline_id, {})
                 led[str(epoch_id)] = {
@@ -1084,8 +988,7 @@ class LakeTable:
         committed reader can see any of it."""
         nm = self._load_staged(staging_id)["manifest"]
         return self._final(spark, nm["files"],
-                           schema_from_json(json.dumps(nm["schema"])),
-                           nm.get("keys_bound"))
+                           schema_from_json(json.dumps(nm["schema"])))
 
     def publish_staged(self, staging_id: str) -> dict:
         """Atomically link a staged commit into the version chain.
@@ -1144,7 +1047,7 @@ class LakeTable:
             return {"compacted": False, "reason": "no-unbucketed-files"}
         df = self._read_files(spark, todo, self.schema())
         sub = f"deltab-v{m['version'] + 1}-{uuid.uuid4().hex[:8]}"
-        entries = self._write_data(df, sub, by_bucket=True)
+        entries = self._write_data(df, sub, n_buckets=m["n_buckets"])
         for e in entries:
             e["kind"] = "delta"
         self._count_rows(entries, self.path, key=self.key)
@@ -1215,51 +1118,35 @@ class LakeTable:
             target = [f for f in m["files"] if f["bucket"] in buckets]
         if not target:
             return {"compacted": False, "reason": "no-files"}
+        nb = m["n_buckets"] if new_n_buckets is None else new_n_buckets
         if (all(f.get("kind") == "base" for f in target)
-                and min_retained_rev is None
-                and (new_n_buckets is None
-                     or new_n_buckets == self.n_buckets)):
+                and min_retained_rev is None and nb == m["n_buckets"]):
             return {"compacted": False, "reason": "already-base"}
-        if new_n_buckets is not None:
-            self.n_buckets = new_n_buckets
         schema = self.schema()
-        # the dedup plan from manifest stats alone (_dedup_plan: the
-        # broadcast join while the winner bound fits the budget and the
-        # parallelism, the single-exchange window beyond) + shuffle-free
-        # bucket write. The running keys_bound (per-commit HLL estimates
-        # riding the apply write job) bounds the winner count, so a
-        # 16M-row/1.1M-key replay compaction picks the join with no
-        # count job. The decision and its inputs go into the commit so
-        # an operator can read which plan ran, and why, from metadata.
-        dedup = self._dedup_plan(
-            target, m.get("keys_bound"), spark.sparkContext.defaultParallelism
-        )
-        final = self._dedup_latest(spark, target, schema, m.get("keys_bound"))
+        # the bucket write keeps the window's key-hash partitioning
+        # (shuffle=False): one exchange for the whole compaction
+        final = self._dedup_latest(spark, target, schema)
         if min_retained_rev is not None:
             final = final.filter(
                 ~F.col(DELETED_COL) | (F.col(REV_COL) >= min_retained_rev)
             )
         final = self._align(final, schema)
         sub = f"base-v{m['version'] + 1}-{uuid.uuid4().hex[:8]}"
-        entries = self._write_data(final, sub, by_bucket=True, shuffle=False)
+        entries = self._write_data(final, sub, n_buckets=nb, shuffle=False)
         for e in entries:
             e["kind"] = "base"
         self._count_rows(entries, self.path, key=self.key)
         nm = self._next_manifest(
             "compact" if buckets is None else "compact-buckets"
         )
-        nm["n_buckets"] = self.n_buckets
-        nm["dedup"] = dedup
+        nm["n_buckets"] = nb
         drop = {f["path"] for f in target}
         kept = [f for f in nm["files"] if f["path"] not in drop]
         nm["files"] = kept + entries if buckets is not None else entries
-        if buckets is None:
-            # full compaction: base rows are exactly one per key (live +
-            # retained tombstones) — reset the running HLL bound to the
-            # exact count, healing any None poisoning from stats-less
-            # appends
-            nm["keys_bound"] = sum(e["rows"] for e in entries)
         self._publish(nm)
+        # only once a manifest records the new count: a failed write or
+        # publish leaves this instance hashing as the head manifest does
+        self.n_buckets = nb
         return {
             "compacted": True,
             "version": nm["version"],
@@ -1285,7 +1172,6 @@ class LakeTable:
             "delta_files": len(delta),
             "base_rows": sum(f["rows"] or 0 for f in base),
             "delta_rows": sum(f["rows"] or 0 for f in delta),
-            "keys_bound": m.get("keys_bound"),
             "rev_high": self.rev_high(),
             "committed_epochs": {
                 p: len(led) for p, led in m["ledger"].items()
@@ -1316,10 +1202,9 @@ class LakeTable:
             os.link(src, dst)
             files.append(dict(f))
         t = LakeTable(dest, key=self.key, n_buckets=m["n_buckets"])
-        t.assume_unique_rev = self.assume_unique_rev
         t._publish_root(
             m["schema"], files, json.loads(json.dumps(m["ledger"])),
-            dict(m["properties"]), keys_bound=m.get("keys_bound"),
+            dict(m["properties"]),
             operation=f"clone-of-{self.path}@v{m['version']}",
         )
         return t

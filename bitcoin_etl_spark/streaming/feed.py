@@ -138,7 +138,7 @@ class TableMirror:
         # crash between the two would re-deliver the old range — and if
         # new upstream commits landed meanwhile, under a NEW epoch id
         # (to_version moved), appending duplicate (key, _rev) rows that
-        # only the safety dedup hides (ADVICE r05). The ledger is the
+        # only the final-state dedup hides (ADVICE r05). The ledger is the
         # authoritative exactly-once record, so the cursor is seeded at
         # (or fast-forwarded to) the last applied to_version — 0, the
         # beginning, for an empty downstream — through the tailer's

@@ -275,8 +275,7 @@ def test_table_mirror_crash_redelivery_no_duplicates(spark, tmp_path):
     range under a NEW to_version epoch id — the ledger alone cannot
     skip it. The mirror must fast-forward its cursor from the ledger so
     the redelivered half is never re-applied: downstream raw rows stay
-    unique per (key, _rev) even for a downstream created with
-    assume_unique_rev."""
+    unique per (key, _rev)."""
     import json as _json
 
     from pyspark.sql import functions as F, types as T
@@ -289,10 +288,7 @@ def test_table_mirror_crash_redelivery_no_duplicates(spark, tmp_path):
         T.StructField("val", T.LongType(), True),
     ])
     up = LakeTable.create(str(tmp_path / "up"), payload, n_buckets=4)
-    down = LakeTable.create(
-        str(tmp_path / "down"), payload, n_buckets=4,
-        properties={"assume_unique_rev": True},
-    )
+    down = LakeTable.create(str(tmp_path / "down"), payload, n_buckets=4)
 
     def delta(rows, epoch):
         up.append_delta(spark.createDataFrame(
@@ -337,10 +333,7 @@ def test_table_mirror_torn_cursor_write_keeps_a_readable_cursor(
         T.StructField("val", T.LongType(), True),
     ])
     up = LakeTable.create(str(tmp_path / "up"), payload, n_buckets=4)
-    down = LakeTable.create(
-        str(tmp_path / "down"), payload, n_buckets=4,
-        properties={"assume_unique_rev": True},
-    )
+    down = LakeTable.create(str(tmp_path / "down"), payload, n_buckets=4)
 
     def delta(rows, epoch):
         up.append_delta(spark.createDataFrame(
