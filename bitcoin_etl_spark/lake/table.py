@@ -384,16 +384,18 @@ class LakeTable:
                 F.lit(None).cast(f.dataType).alias(f.name)
                 for f in schema.fields
             ])
-        paths = [os.path.join(self.path, f["path"]) for f in files]
+        # one Java String[] from one py4j call (NUL never occurs in a
+        # POSIX path): parquet(*paths) converts the list one round trip
+        # per path, so a read's build cost grew with the snapshot
+        paths = spark._jvm.java.util.regex.Pattern.compile("\0").split(
+            "\0".join(os.path.join(self.path, f["path"]) for f in files)
+        )
         # recursiveFileLookup disables hive partition inference so mixed
         # snapshot dir layouts never surface phantom partition columns;
         # explicit schema null-fills columns absent from old files
         # (additive evolution).
-        return (
-            spark.read.schema(schema)
-            .option("recursiveFileLookup", "true")
-            .parquet(*paths)
-        )
+        reader = spark.read.schema(schema).option("recursiveFileLookup", "true")
+        return reader._df(reader._jreader.parquet(paths))
 
     def read_raw(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """All row versions incl. tombstones (the unmerged-parts view)."""

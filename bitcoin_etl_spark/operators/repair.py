@@ -37,9 +37,7 @@ def find_missing_epochs(
     applied = sorted(table.committed_epochs(pipeline_id))
     hi = expected_max if expected_max is not None else (applied[-1] if applied else -1)
     seq = spark.range(0, hi + 1).withColumnRenamed("id", "epoch")
-    have = spark.createDataFrame(
-        [(e,) for e in applied] or spark.sparkContext.emptyRDD(), "epoch long"
-    ) if applied else spark.createDataFrame([], "epoch long")
+    have = spark.createDataFrame([(e,) for e in applied], "epoch long")
     return seq.join(have, "epoch", "left_anti").orderBy("epoch")
 
 

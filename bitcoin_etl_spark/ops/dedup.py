@@ -5,16 +5,18 @@ only joins are equi-joins on hashes/buckets/signatures, so shuffle
 volume is O(docs × signature width), never O(docs²). Candidate
 verification (exact Jaccard) happens only on LSH-bucketed candidates.
 
-Checkpoint lifecycle: the n-gram/winnow pair generators materialize
-their per-doc and capped streams with ``localCheckpoint`` (plan
-barriers — see the inline comments for the two optimizer hazards that
-force this). Those blocks are non-replicated executor storage: they are
-NOT lineage-recoverable after an executor loss (the job fails and must
-be rerun — acceptable for a batch dedup pass, but a caller embedding
-these frames in a long-lived pipeline should be aware), and they live
-until the returned frame is garbage-collected. A caller running MANY
-dedup passes in one session can release a consumed result's blocks
-deterministically with ``bitcoin_etl_spark.util.free_local_checkpoint``
+Checkpoint lifecycle: ``lsh_candidate_pairs``, ``hamming_near_pairs``,
+``ngram_jaccard_pairs`` and ``winnow_candidate_pairs`` materialize their
+one-row-per-doc frame with ``localCheckpoint`` (a plan barrier, so
+building them runs a job), ``connected_components`` its edge list and
+each round's labels. Those blocks are non-replicated executor storage:
+they are NOT lineage-recoverable after an executor loss (the job fails
+and must be rerun — acceptable for a batch dedup pass, but a caller
+embedding these frames in a long-lived pipeline should be aware), and
+they live until the returned frame is garbage-collected. A caller
+running MANY dedup passes in one session can release a consumed
+result's blocks deterministically with
+``bitcoin_etl_spark.util.free_local_checkpoint``
 (``connected_components`` already frees its per-round checkpoints this
 way).
 """
@@ -276,12 +278,14 @@ def lsh_candidate_pairs(sig: DataFrame, id_col: str = "doc_id",
     LSH shuffle shape that survives 100 TB. The bucket key is the raw
     array of band hash values (not a re-hash): Spark shuffles/joins on
     array<long> natively, and the same key is computable in an
-    independent SQL oracle (no Spark-only xxhash64)."""
+    independent SQL oracle (no Spark-only xxhash64). Building the frame
+    runs a job: a batch ``sig`` is ``localCheckpoint``ed eagerly."""
     rows = n_hashes // bands
     # the signature frame feeds BOTH self-join sides: without a plan
     # barrier the whole upstream (shingle explode + md5 + groupBy) is
     # planned — and executed — twice, once per side (confirmed in the
-    # r06 before-plan: two identical 15-operator subtrees). The frame is
+    # r06 before-plan: two identical 15-operator subtrees; sf0.1: 1.3 s
+    # with it, 2.1–2.3 s without). The frame is
     # one row per doc (id + n_hashes longs), so materializing it is
     # near-free at any corpus size.
     if not sig.isStreaming:
@@ -366,19 +370,22 @@ def hamming_near_pairs(sim: DataFrame, id_col: str = "doc_id",
     50k docs, 34.4k values, and the band-bucket Σf² probe volume drops
     1.75B → 0.6B because hot buckets repeat values), and hamming
     depends only on the values. Qualifying (va < vb) value pairs are
-    then expanded back to doc pairs through two broadcast joins against
-    the tiny per-doc signature frame, and same-value doc pairs
-    (hamming 0) come from one broadcast self-equi-join. Every pair is
+    then expanded back to doc pairs through two equi-joins against the
+    per-doc signature frame, and same-value doc pairs (hamming 0) come
+    from one self-equi-join; Spark's join selection broadcasts the
+    signature frame while its size estimate stays under
+    ``spark.sql.autoBroadcastJoinThreshold``. Every pair is
     emitted exactly once: value pairs only from their LOWEST agreeing
     band (agree_mask/premask arithmetic — no union + distinct over the
     multiplied candidate stream), doc pairs once per value pair with
     (least, greatest) orientation, and the intra-value branch is
-    disjoint from the cross-value one by construction."""
+    disjoint from the cross-value one by construction. Building the
+    frame runs a job: a batch ``sim`` is ``localCheckpoint``ed eagerly."""
     n_bands = max_hamming + 1
     bounds = [round(i * bits / n_bands) for i in range(n_bands + 1)]
-    # self-join barrier: both sides read the (one-row-per-doc) signature
-    # frame — materialize it once instead of running the simhash
-    # aggregation twice (see lsh_candidate_pairs)
+    # self-join barrier: the one-row-per-doc signature feeds the value
+    # distinct and both doc-pair joins (sf0.1: 1.5 s with it, 2.2–2.9 s
+    # without)
     if not sim.isStreaming:
         sim = sim.localCheckpoint()
     # AQE coalesces the tiny distinct's shuffle to ONE partition, which
@@ -388,8 +395,6 @@ def hamming_near_pairs(sim: DataFrame, id_col: str = "doc_id",
     # probe side
     par = sim.sparkSession.sparkContext.defaultParallelism
     vals = sim.select("simhash").distinct().repartition(par)
-    if not sim.isStreaming:
-        vals = vals.localCheckpoint()
     # one explode, not a union of n_bands projections — see
     # lsh_candidate_pairs
     band_arr = F.array(*[
@@ -436,27 +441,25 @@ def hamming_near_pairs(sim: DataFrame, id_col: str = "doc_id",
             ).alias("hamming"),
         )
     )
-    # expand value pairs to doc pairs: the signature frame is one narrow
-    # row per doc — broadcast it to both attachment joins so the (large)
-    # value-pair stream is never shuffled
+    # expand value pairs to doc pairs
     da = sim.select(F.col(id_col).alias("_ida"),
                     F.col("simhash").alias("_va"))
     db = sim.select(F.col(id_col).alias("_idb"),
                     F.col("simhash").alias("_vb"))
     cross = (
-        vpairs.join(F.broadcast(da), "_va")
-        .join(F.broadcast(db), "_vb")
+        vpairs.join(da, "_va")
+        .join(db, "_vb")
         .select(
             F.least("_ida", "_idb").alias("id_a"),
             F.greatest("_ida", "_idb").alias("id_b"),
             "hamming",
         )
     )
-    # same-fingerprint doc pairs (hamming 0): broadcast self-equi-join
+    # same-fingerprint doc pairs (hamming 0): self-equi-join
     sa, sb = sim.alias("sa"), sim.alias("sb")
     intra = (
         sa.join(
-            F.broadcast(sb),
+            sb,
             (F.col("sa.simhash") == F.col("sb.simhash"))
             & (F.col(f"sa.{id_col}") < F.col(f"sb.{id_col}")),
         )
@@ -533,24 +536,21 @@ def ngram_jaccard_pairs(df: DataFrame, candidates: DataFrame | None,
     # stream into a narrow map. The one-row-per-doc frame is barriered
     # (localCheckpoint) because it feeds the doc-frequency table, the
     # per-doc sizes, AND both self-join sides — without the barrier each
-    # subtree re-runs tokenize+shingle from the scan.
+    # subtree re-runs tokenize+shingle from the scan (sf0.1: 2.3 s with
+    # it, 23 s without).
     per_doc = _tokens_frame(_spread(df, id_col), text_col, id_col).select(
         F.col(id_col),
         F.array_distinct(_shingles_of(F.col("_ws"), shingle_k)).alias("_shs"),
     ).localCheckpoint()
     sh = per_doc.select(F.col(id_col), F.explode("_shs").alias("sh"))
     if max_doc_freq is not None:
-        # anti-join against the (tiny) over-cap shingle set rather than
+        # anti-join against the over-cap shingle set rather than
         # inner-joining the full per-shingle frequency table — identical
-        # result, broadcast-sized build side (see winnow_candidate_pairs)
+        # result (see winnow_candidate_pairs). Hinted: at most
+        # rows/max_doc_freq shingles pass, a bound Spark cannot see
         freq = sh.groupBy("sh").agg(F.count("*").alias("_df"))
         hot = F.broadcast(freq.filter(F.col("_df") > max_doc_freq))
         sh = sh.join(hot, "sh", "left_anti").select(id_col, "sh")
-        # the capped stream feeds sizes + both join sides: materialize it
-        # once so the freq aggregation + cap join run a single time
-        # instead of once per consumer (the shingle scan formerly
-        # appeared twice in the captured plan — BENCH/PLANS.md)
-        sh = sh.localCheckpoint()
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     a = sh.toDF("id_a", "sh")
     b = sh.toDF("id_b", "sh")
@@ -671,26 +671,23 @@ def winnow_candidate_pairs(df: DataFrame, text_col: str = "text",
     # into that filter, in the nested form that re-evaluates the hash
     # array once per window: O(positions²) md5 per row (observed as a
     # single task pinned in Substring/ArrayTransform for minutes at
-    # sf0.1). The checkpointed frame is one row per doc — tiny at any
-    # SF — and downstream sees only materialized arrays.
+    # sf0.1; sf0.1 now: 2.0 s with it, 2.5–2.8 s without). The
+    # checkpointed frame is one row per doc — tiny at any SF — and
+    # downstream sees only materialized arrays.
     fp = winnow_fingerprints(
         _spread(df, id_col), text_col, id_col, k, w
     ).localCheckpoint()
     ex = fp.select(F.col(id_col), F.explode("fps").alias("fp"))
     if max_doc_freq is not None:
         # the cap DROPS fingerprints whose doc-frequency exceeds it, so
-        # anti-join against the hot set (tiny by construction — only
-        # boilerplate runs exceed the cap) instead of inner-joining the
+        # anti-join against the hot set instead of inner-joining the
         # full frequency table (~one row per distinct fingerprint; the
         # inner form planned a sort-merge join of two million-row sides
-        # at sf1.0, the anti form a broadcast of the handful of hot fps)
+        # at sf1.0). Hinted: at most rows/max_doc_freq fingerprints
+        # pass, a bound Spark cannot see
         freq = ex.groupBy("fp").agg(F.count("*").alias("_df"))
         hot = F.broadcast(freq.filter(F.col("_df") > max_doc_freq))
-        ex = ex.join(hot, "fp", "left_anti").select(
-            id_col, "fp"
-        ).localCheckpoint()
-        # barriered: the capped stream feeds BOTH self-join sides, and
-        # without it the freq aggregation + cap join plan twice
+        ex = ex.join(hot, "fp", "left_anti").select(id_col, "fp")
     a = ex.select(F.col(id_col).alias("id_a"), "fp")
     b = ex.select(F.col(id_col).alias("id_b"), "fp")
     return (

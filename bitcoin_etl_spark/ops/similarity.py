@@ -176,6 +176,7 @@ def ivf_assign(df: DataFrame, centroids: DataFrame,
     per-key window: the n×K scored rows collapse to n on the map side
     before the one hash shuffle, instead of shuffling all n×K rows into
     window partitions."""
+    # hinted: K centroid rows, a bound Spark cannot see in a filter
     j = df.crossJoin(F.broadcast(centroids))
     scored = j.select(
         id_col, vec_col, cent_id,
@@ -213,7 +214,9 @@ def embedding_near_dup_pairs(df: DataFrame, dim: int,
     is gone; the candidate id pairs are re-spread (the small join
     output AQE-coalesces to one partition, which would single-task the
     million-candidate cosine verify) and vectors are attached by two
-    id equi-joins only for verification. Result set identical."""
+    id equi-joins only for verification. Result set identical. Building
+    the frame runs a job: a batch input's buckets are
+    ``localCheckpoint``ed eagerly."""
     from .dedup import _spread
 
     # spread before the interpreted hyperplane dot products: a single
@@ -228,6 +231,8 @@ def embedding_near_dup_pairs(df: DataFrame, dim: int,
         ],
     )
     streaming = df.isStreaming
+    # barrier: bcols feeds the band self-join and both vector attaches;
+    # without it sf0.1 ann_embedding_near_dup plans 30 stages, not 17
     if not streaming:
         bcols = bcols.localCheckpoint()
     tab_arr = F.array(*[
@@ -272,14 +277,6 @@ def embedding_near_dup_pairs(df: DataFrame, dim: int,
         # million-candidate cosine evaluation
         par = df.sparkSession.sparkContext.defaultParallelism
         cand = cand.repartition(par)
-        # size-aware attach: the vector frame is one row per vector —
-        # broadcastable for any corpus that fits the executor budget
-        # (~150 MB at 500k x 64 floats), far cheaper than sorting the
-        # multi-million-row candidate stream twice; beyond the budget
-        # the plain equi-joins stand (the count is a near-free job over
-        # the already-materialized checkpoint blocks)
-        if bcols.count() <= 500_000:
-            va, vb = F.broadcast(va), F.broadcast(vb)
     return (
         cand.join(va, "id_a").join(vb, "id_b")
         .withColumn("cos", cosine(_dbl(F.col("va")), _dbl(F.col("vb"))))

@@ -1469,3 +1469,54 @@ def test_read_changes_rejects_backward_range(spark, tmp_path):
         ), epoch_id=e)
     with pytest.raises(ValueError, match="ahead of"):
         table.read_changes(spark, 2, 1)
+
+
+def test_read_files_builds_with_a_fixed_number_of_py4j_calls(
+        spark, tmp_path, monkeypatch):
+    """Building a read of a snapshot's files must not cost one py4j
+    round trip per file: the path list crosses as one Java array, so 4
+    and 40 files make the same number of calls and read every row."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from py4j.clientserver import ClientServerConnection
+    from pyspark.sql import types as T
+
+    payload = T.StructType([
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("val", T.StringType(), True),
+    ])
+    table = LakeTable.create(str(tmp_path / "t"), payload, n_buckets=4)
+    os.makedirs(os.path.join(table.path, "data", "probe"))
+    files = []
+    for i in range(40):
+        rel = os.path.join("data", "probe", f"part-{i}.parquet")
+        pq.write_table(pa.table({
+            "doc_id": pa.array([i], pa.int64()),
+            "val": [f"v{i}"],
+            "_rev": pa.array([i], pa.int64()),
+            "_deleted": [False],
+        }), os.path.join(table.path, rel))
+        files.append({"path": rel})
+    schema = table.schema()
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        # "m" commands are py4j's deletes of garbage-collected proxies,
+        # sent whenever Python's GC runs: not part of building the read
+        if not command.startswith("m\n"):
+            calls.append(1)
+        return send(self, command)
+
+    def build_calls(n):
+        calls.clear()
+        monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+        df = table._read_files(spark, files[:n], schema)
+        monkeypatch.setattr(ClientServerConnection, "send_command", send)
+        assert sorted(r["doc_id"] for r in df.collect()) == list(range(n))
+        return len(calls)
+
+    build_calls(4)  # warm the reader's JVM class and method lookups
+    assert build_calls(4) == build_calls(40)
