@@ -384,9 +384,8 @@ class LakeTable:
                 F.lit(None).cast(f.dataType).alias(f.name)
                 for f in schema.fields
             ])
-        # one Java String[] from one py4j call (NUL never occurs in a
-        # POSIX path): parquet(*paths) converts the list one round trip
-        # per path, so a read's build cost grew with the snapshot
+        # one Java String[] in one py4j call (NUL never occurs in a POSIX
+        # path); parquet(*paths) pays one round trip per path
         paths = spark._jvm.java.util.regex.Pattern.compile("\0").split(
             "\0".join(os.path.join(self.path, f["path"]) for f in files)
         )

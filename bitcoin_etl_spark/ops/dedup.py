@@ -8,8 +8,9 @@ verification (exact Jaccard) happens only on LSH-bucketed candidates.
 Checkpoint lifecycle: ``lsh_candidate_pairs``, ``hamming_near_pairs``,
 ``ngram_jaccard_pairs`` and ``winnow_candidate_pairs`` materialize their
 one-row-per-doc frame with ``localCheckpoint`` (a plan barrier, so
-building them runs a job), ``connected_components`` its edge list and
-each round's labels. Those blocks are non-replicated executor storage:
+building them runs a job), ``ngram_jaccard_pairs`` also its capped
+shingle stream, ``connected_components`` its edge list and each round's
+labels. Those blocks are non-replicated executor storage:
 they are NOT lineage-recoverable after an executor loss (the job fails
 and must be rerun — acceptable for a batch dedup pass, but a caller
 embedding these frames in a long-lived pipeline should be aware), and
@@ -372,9 +373,7 @@ def hamming_near_pairs(sim: DataFrame, id_col: str = "doc_id",
     depends only on the values. Qualifying (va < vb) value pairs are
     then expanded back to doc pairs through two equi-joins against the
     per-doc signature frame, and same-value doc pairs (hamming 0) come
-    from one self-equi-join; Spark's join selection broadcasts the
-    signature frame while its size estimate stays under
-    ``spark.sql.autoBroadcastJoinThreshold``. Every pair is
+    from one self-equi-join. Every pair is
     emitted exactly once: value pairs only from their LOWEST agreeing
     band (agree_mask/premask arithmetic — no union + distinct over the
     multiplied candidate stream), doc pairs once per value pair with
@@ -544,13 +543,17 @@ def ngram_jaccard_pairs(df: DataFrame, candidates: DataFrame | None,
     ).localCheckpoint()
     sh = per_doc.select(F.col(id_col), F.explode("_shs").alias("sh"))
     if max_doc_freq is not None:
-        # anti-join against the over-cap shingle set rather than
-        # inner-joining the full per-shingle frequency table — identical
-        # result (see winnow_candidate_pairs). Hinted: at most
-        # rows/max_doc_freq shingles pass, a bound Spark cannot see
+        # anti-join against the over-cap shingle set (at most
+        # rows/max_doc_freq rows, a bound Spark cannot see: hinted) rather
+        # than inner-joining the full per-shingle frequency table
         freq = sh.groupBy("sh").agg(F.count("*").alias("_df"))
         hot = F.broadcast(freq.filter(F.col("_df") > max_doc_freq))
         sh = sh.join(hot, "sh", "left_anti").select(id_col, "sh")
+        # the capped stream feeds sizes + both join sides: materialize it
+        # once so the freq aggregation + cap join run a single time
+        # instead of once per consumer (sf0.1 dedup_ngram_jaccard_capped:
+        # 1.3 s with it, 1.7 s without)
+        sh = sh.localCheckpoint()
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     a = sh.toDF("id_a", "sh")
     b = sh.toDF("id_b", "sh")
@@ -671,7 +674,7 @@ def winnow_candidate_pairs(df: DataFrame, text_col: str = "text",
     # into that filter, in the nested form that re-evaluates the hash
     # array once per window: O(positions²) md5 per row (observed as a
     # single task pinned in Substring/ArrayTransform for minutes at
-    # sf0.1; sf0.1 now: 2.0 s with it, 2.5–2.8 s without). The
+    # sf0.1; 2.0 s with the barrier, 2.5–2.8 s without). The
     # checkpointed frame is one row per doc — tiny at any SF — and
     # downstream sees only materialized arrays.
     fp = winnow_fingerprints(
@@ -680,11 +683,10 @@ def winnow_candidate_pairs(df: DataFrame, text_col: str = "text",
     ex = fp.select(F.col(id_col), F.explode("fps").alias("fp"))
     if max_doc_freq is not None:
         # the cap DROPS fingerprints whose doc-frequency exceeds it, so
-        # anti-join against the hot set instead of inner-joining the
-        # full frequency table (~one row per distinct fingerprint; the
-        # inner form planned a sort-merge join of two million-row sides
-        # at sf1.0). Hinted: at most rows/max_doc_freq fingerprints
-        # pass, a bound Spark cannot see
+        # anti-join against the hot set (at most rows/max_doc_freq rows,
+        # a bound Spark cannot see: hinted) instead of inner-joining the
+        # full frequency table (the inner form planned a sort-merge join
+        # of two million-row sides at sf1.0)
         freq = ex.groupBy("fp").agg(F.count("*").alias("_df"))
         hot = F.broadcast(freq.filter(F.col("_df") > max_doc_freq))
         ex = ex.join(hot, "fp", "left_anti").select(id_col, "fp")

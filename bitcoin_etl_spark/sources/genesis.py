@@ -24,8 +24,7 @@ def inject_static_rows(df: DataFrame, static_df: DataFrame,
     """Union a fixed row-set into a mapped stream, static side wins on
     key collision (the reference filters the genesis hash out of the
     fetch, then appends the constant — same precedence)."""
-    # hinted: a few constant rows in an RDD-backed frame, whose size
-    # estimate is Spark's huge default
+    # hinted: a few constant rows, RDD-backed, so Spark sees no size
     keys = F.broadcast(static_df.select(key).distinct())
     return df.join(keys, key, "left_anti").unionByName(
         static_df, allowMissingColumns=True
