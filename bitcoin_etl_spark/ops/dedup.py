@@ -10,14 +10,13 @@ Checkpoint lifecycle: ``lsh_candidate_pairs``, ``hamming_near_pairs``,
 one-row-per-doc frame with ``localCheckpoint`` (a plan barrier, so
 building them runs a job), ``ngram_jaccard_pairs`` also its capped
 shingle stream, ``connected_components`` its edge list and each round's
-labels. Those blocks are non-replicated executor storage:
-they are NOT lineage-recoverable after an executor loss (the job fails
-and must be rerun — acceptable for a batch dedup pass, but a caller
-embedding these frames in a long-lived pipeline should be aware), and
-they live until the returned frame is garbage-collected. A caller
-running MANY dedup passes in one session can release a consumed
-result's blocks deterministically with
-``bitcoin_etl_spark.util.free_local_checkpoint``
+labels. Those blocks are non-replicated executor storage: they are NOT
+lineage-recoverable after an executor loss (the job fails and must be
+rerun — acceptable for a batch dedup pass, but a caller embedding these
+frames in a long-lived pipeline should be aware), and they live until
+the returned frame is garbage-collected. A caller running MANY dedup
+passes in one session can release a consumed result's blocks
+deterministically with ``bitcoin_etl_spark.util.free_local_checkpoint``
 (``connected_components`` already frees its per-round checkpoints this
 way).
 """
@@ -286,9 +285,9 @@ def lsh_candidate_pairs(sig: DataFrame, id_col: str = "doc_id",
     # barrier the whole upstream (shingle explode + md5 + groupBy) is
     # planned — and executed — twice, once per side (confirmed in the
     # r06 before-plan: two identical 15-operator subtrees; sf0.1: 1.3 s
-    # with it, 2.1–2.3 s without). The frame is
-    # one row per doc (id + n_hashes longs), so materializing it is
-    # near-free at any corpus size.
+    # with it, 2.1–2.3 s without). The frame is one row per doc (id +
+    # n_hashes longs), so materializing it is near-free at any corpus
+    # size.
     if not sig.isStreaming:
         sig = sig.localCheckpoint()
     # ONE explode over a per-row band array, not a union of `bands`
@@ -373,13 +372,13 @@ def hamming_near_pairs(sim: DataFrame, id_col: str = "doc_id",
     depends only on the values. Qualifying (va < vb) value pairs are
     then expanded back to doc pairs through two equi-joins against the
     per-doc signature frame, and same-value doc pairs (hamming 0) come
-    from one self-equi-join. Every pair is
-    emitted exactly once: value pairs only from their LOWEST agreeing
-    band (agree_mask/premask arithmetic — no union + distinct over the
-    multiplied candidate stream), doc pairs once per value pair with
-    (least, greatest) orientation, and the intra-value branch is
-    disjoint from the cross-value one by construction. Building the
-    frame runs a job: a batch ``sim`` is ``localCheckpoint``ed eagerly."""
+    from one self-equi-join. Every pair is emitted exactly once: value
+    pairs only from their LOWEST agreeing band (agree_mask/premask
+    arithmetic — no union + distinct over the multiplied candidate
+    stream), doc pairs once per value pair with (least, greatest)
+    orientation, and the intra-value branch is disjoint from the
+    cross-value one by construction. Building the frame runs a job: a
+    batch ``sim`` is ``localCheckpoint``ed eagerly."""
     n_bands = max_hamming + 1
     bounds = [round(i * bits / n_bands) for i in range(n_bands + 1)]
     # self-join barrier: the one-row-per-doc signature feeds the value
@@ -440,7 +439,6 @@ def hamming_near_pairs(sim: DataFrame, id_col: str = "doc_id",
             ).alias("hamming"),
         )
     )
-    # expand value pairs to doc pairs
     da = sim.select(F.col(id_col).alias("_ida"),
                     F.col("simhash").alias("_va"))
     db = sim.select(F.col(id_col).alias("_idb"),
