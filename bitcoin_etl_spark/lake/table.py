@@ -86,13 +86,67 @@ def _fits_one_partition(df: DataFrame) -> bool:
     into one partition (``coalesce(1)``): ``SinglePartition`` satisfies
     every clustered distribution, so a keyed aggregate over it plans no
     exchange, and a small increment runs as one Spark job instead of a
-    shuffle map job plus AQE's re-planned stages. A frame with no
+    shuffle map job plus AQE's re-planned stages. Such a frame is also
+    written from the driver (``write_parquet``): at this size Spark
+    already collects a broadcast side to the driver. A frame with no
     estimate (RDD-backed) reports Spark's default size, which is huge,
-    so it keeps the shuffle."""
+    so it keeps the shuffle and Spark's writer."""
     limit = (df.sparkSession._jsparkSession.sessionState().conf()
              .autoBroadcastJoinThreshold())
     size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     return 0 <= limit and size <= limit
+
+
+# suffix of the driver write's local encoding, which sits beside the
+# file it becomes; never a ``.parquet`` name, so no reader or manifest
+# entry picks it up, and ``vacuum`` removes one a crash left behind
+_TMP_SUFFIX = ".tmp"
+# what Spark's writer leaves beside its files once a job commits; a
+# write directory holding only these holds no data
+_MARKERS = {"_SUCCESS", "._SUCCESS.crc"}
+
+
+def write_parquet(df: DataFrame, out_dir: str,
+                  mode: str = "errorifexists") -> None:
+    """Write ``df`` as parquet under ``out_dir`` (``mode`` as in
+    ``DataFrameWriter``: ``errorifexists`` or ``overwrite``).
+
+    A frame that ``_fits_one_partition`` is written from the driver: one
+    Spark job collects it as Arrow (under the caller's job group, and
+    its ``Observation``s fire), ``pyarrow`` encodes one snappy file, and
+    Hadoop's ``FileSystem`` copies it in, so the checksummed local file
+    system writes the same ``.crc`` sidecar Spark's writer does and
+    Spark verifies on read. For a small frame, Spark's writer costs more
+    in write planning, committer set-up, task launch and job commit than
+    in writing. An empty frame still yields one zero-row file. Larger
+    frames, and frames with no size estimate, keep Spark's writer. The
+    bound caps driver memory where Spark's broadcasts cap it, and
+    ``spark.driver.maxResultSize`` turns an estimate far below the real
+    size into an error, not an out-of-memory driver."""
+    if not _fits_one_partition(df):
+        df.write.mode(mode).parquet(out_dir)
+        return
+    import pyarrow.parquet as pq
+
+    data = df.toArrow()
+    if mode == "overwrite":
+        shutil.rmtree(out_dir, ignore_errors=True)
+    os.makedirs(out_dir)  # errorifexists: fails on an existing directory
+    name = f"part-00000-{uuid.uuid4()}-c000.snappy.parquet"
+    tmp = os.path.join(out_dir, f".{name}{_TMP_SUFFIX}")
+    try:
+        pq.write_table(data, tmp, compression="snappy")
+        spark = df.sparkSession
+        jvm = spark._jvm
+        dest = jvm.org.apache.hadoop.fs.Path(os.path.join(out_dir, name))
+        fs = dest.getFileSystem(spark._jsc.hadoopConfiguration())
+        # copyBytes closes both streams
+        jvm.org.apache.hadoop.io.IOUtils.copyBytes(
+            jvm.java.io.FileInputStream(tmp), fs.create(dest, False),
+            1 << 16, True)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
 
 
 def _hashed_bucket(f: dict, key_type: str) -> int | None:
@@ -300,7 +354,9 @@ class LakeTable:
         v = manifest["version"]
         tmp = os.path.join(self._manifest_dir, f".tmp-{uuid.uuid4().hex}.json")
         with open(tmp, "w") as f:
-            json.dump(manifest, f)
+            # one C-encoded string: json.dump streams through the
+            # pure-Python encoder, which dominates a long chain's commit
+            f.write(json.dumps(manifest))
             f.flush()
             os.fsync(f.fileno())
         final = os.path.join(self._manifest_dir, f"v{v}.json")
@@ -537,7 +593,9 @@ class LakeTable:
 
         An ``n_buckets`` count writes one directory per key-hash bucket
         (partitionBy) so entries carry a bucket id, and the key type it
-        was hashed under, for pruning; ``None`` writes unbucketed files.
+        was hashed under, for pruning; ``None`` writes unbucketed files
+        through ``write_parquet`` (one file from the driver below the
+        one-partition bound).
         The count is the caller's, never the live attribute: it must be
         the one the publishing manifest records.
         ``shuffle=False`` replaces the bucket repartition with a narrow
@@ -582,7 +640,7 @@ class LakeTable:
                 .parquet(out_dir)
             )
         else:
-            df.write.mode("errorifexists").parquet(out_dir)
+            write_parquet(df, out_dir)
         entries: list[dict] = []
         for root, _dirs, names in os.walk(out_dir):
             for name in names:
@@ -934,15 +992,12 @@ class LakeTable:
             sid = uuid.uuid4().hex[:12]
             spath = os.path.join(self._manifest_dir, f"staged-{sid}.json")
             with open(spath, "w") as f:
-                json.dump(
-                    {
-                        "manifest": nm,
-                        "added": [e["path"] for e in entries],
-                        "data_sub": sub,
-                        "staged_at": time.time(),
-                    },
-                    f,
-                )
+                f.write(json.dumps({
+                    "manifest": nm,
+                    "added": [e["path"] for e in entries],
+                    "data_sub": sub,
+                    "staged_at": time.time(),
+                }))
             return {"skipped": False, "staged": True, "staging_id": sid,
                     "epoch": epoch_id, "rows": rows,
                     "parent_version": nm["parent"]}
@@ -1263,7 +1318,10 @@ class LakeTable:
 
     def vacuum(self, keep_versions: int = 2) -> int:
         """Delete data files unreferenced by the last ``keep_versions``
-        manifests (snapshot-expiry analog). Returns #files removed."""
+        manifests (snapshot-expiry analog), each with its ``.crc``
+        sidecar, the temp files of driver writes a crash interrupted, and
+        write directories left holding only commit markers. Returns the
+        number of data files removed."""
         cur = self.current_version() or 0
         keep: set[str] = set()
         for v in range(max(0, cur - keep_versions + 1), cur + 1):
@@ -1275,12 +1333,20 @@ class LakeTable:
             staged = self._load_staged(sid)
             keep.update(f["path"] for f in staged["manifest"]["files"])
         removed = 0
-        for root, _dirs, names in os.walk(self._data_dir):
+        for root, _dirs, names in os.walk(self._data_dir, topdown=False):
             for name in names:
-                if not name.endswith(".parquet"):
-                    continue
-                rel = os.path.relpath(os.path.join(root, name), self.path)
-                if rel not in keep:
-                    os.unlink(os.path.join(root, name))
-                    removed += 1
+                # a checksummed file system's sidecar of file X is .X.crc
+                of = (name[1:-len(".crc")]
+                      if name.startswith(".") and name.endswith(".crc")
+                      else name)
+                if of.endswith(".parquet"):
+                    if os.path.relpath(os.path.join(root, of),
+                                       self.path) in keep:
+                        continue
+                elif not of.endswith(_TMP_SUFFIX):
+                    continue  # a marker, or no file of the engine's
+                os.unlink(os.path.join(root, name))
+                removed += name.endswith(".parquet")
+            if root != self._data_dir and set(os.listdir(root)) <= _MARKERS:
+                shutil.rmtree(root)
         return removed

@@ -15,22 +15,26 @@ commit per epoch:
 Reorg rollbacks need no special path: compensation D events become
 tombstones with higher ``_rev`` than the rows they kill (C4/C5 analog).
 
-Cost model, per epoch: the delta write is one Spark job. With
-``pre_reduce``, an epoch whose size estimate is above the one-partition
-bound (``spark.sql.autoBroadcastJoinThreshold``, see
-``last_event_wins``) adds one: AQE runs the reduction's shuffle map
-stage as its own job. A small epoch is reduced in one partition, inside
-the write job. Validation/reduction stats ride the delta-write action as
+Cost model, per epoch: the delta write is one Spark job. Below the
+one-partition bound (``spark.sql.autoBroadcastJoinThreshold``, see
+``last_event_wins`` and ``write_parquet``) that job collects the delta
+as Arrow and the driver encodes and writes its one file, which skips
+Spark's write planning, committer set-up and job commit; above it,
+Spark's writer runs the job. With ``pre_reduce``, an epoch above the
+bound adds one job: AQE runs the reduction's shuffle map stage as its
+own job. A small epoch is reduced in one partition, inside the write
+job. Validation/reduction stats ride the delta-write action as
 ``Observation`` metrics (the ``observe()`` analog of the reference's
 AtomicCounter sink metrics, A7/T8 — ``composite_item_exporter.py:70-79``)
 instead of separate count jobs. Quarantine is ``eager`` or ``lazy``:
 
-* ``eager`` writes the epoch's bad rows as one more job, so a small
-  eager, pre-reduced epoch runs 2 jobs (3 above the bound). That job
-  runs on a background thread alongside the delta write (keeping the
-  caller's job group) and is joined before the manifest publish: an
-  epoch enters the ledger only once its bad rows are durable, and a
-  failed quarantine write fails the commit.
+* ``eager`` writes the epoch's bad rows through the same
+  ``write_parquet`` as one more job, so a small eager, pre-reduced
+  epoch runs 2 jobs (3 above the bound). That write runs on a
+  background thread alongside the delta write (keeping the caller's job
+  group) and is joined before the manifest publish: an epoch enters the
+  ledger only once its bad rows are durable, and a failed quarantine
+  write fails the commit.
 * ``lazy`` writes nothing: bad rows remain derivable from the change log
   via ``scan_quarantine``, and their count rides the delta write.
 
@@ -51,7 +55,9 @@ from functools import cached_property
 from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
-from ..lake.table import DELETED_COL, REV_COL, LakeTable, last_event_wins
+from ..lake.table import (
+    DELETED_COL, REV_COL, LakeTable, last_event_wins, write_parquet,
+)
 from .validate import tokens_valid_expr, tokens_valid_udf
 
 CHANGE_META_COLS = ("seq", "epoch", "op", "block", "reorg_of", "ingest_ts")
@@ -166,9 +172,10 @@ class EpochApplier:
                 # Observation; the write overlaps the delta write below
                 qdir = self._quarantine_path(epoch_id)
                 obs_bad = Observation(f"bad-{tag}")
-                writer = df.where(self._invalid).observe(
-                    obs_bad, self._bad_count).write.mode("overwrite")
-                pending = _in_background(spark, lambda: writer.parquet(qdir))
+                bad_rows = df.where(self._invalid).observe(
+                    obs_bad, self._bad_count)
+                pending = _in_background(spark, lambda: write_parquet(
+                    bad_rows, qdir, mode="overwrite"))
                 valid = df.where(self._valid)
             else:
                 # lazy: count invalids as an observed metric on the same pass

@@ -1520,3 +1520,190 @@ def test_read_files_builds_with_a_fixed_number_of_py4j_calls(
 
     build_calls(4)  # warm the reader's JVM class and method lookups
     assert build_calls(4) == build_calls(40)
+
+
+def _added_per_commit(table):
+    """Per commit after v0: the non-empty file entries it added."""
+    out, prev = [], set()
+    for v in range(table.current_version() + 1):
+        files = table.manifest(v)["files"]
+        if v:
+            out.append([f for f in files
+                        if f["path"] not in prev and f["rows"]])
+        prev = {f["path"] for f in files}
+    return out
+
+
+def _file_stats(entries):
+    """One commit's added rows, ``_rev`` range and key range."""
+    return (sum(f["rows"] for f in entries),
+            min(f["rev_min"] for f in entries),
+            max(f["rev_max"] for f in entries),
+            min(f["key_min"] for f in entries),
+            max(f["key_max"] for f in entries))
+
+
+def test_spark_writer_above_the_bound_commits_what_the_driver_writes(
+        spark, tmp_path):
+    """Every epoch here fits the one-partition bound, so its delta and
+    its eager quarantine rows are written from the driver, one file per
+    commit. With the bound off (``autoBroadcastJoinThreshold=-1``) the
+    same epochs go through Spark's writer; the final state, the change
+    feed, the quarantine and each commit's file statistics are the
+    same."""
+    scen_dir = str(tmp_path / "scen")
+    generate_scenario(scen_dir, SCENARIOS["bad_rows"])
+    driver, d_app, _ = _replay(spark, scen_dir, str(tmp_path / "driver"))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    bound = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        wide, w_app, _ = _replay(spark, scen_dir, str(tmp_path / "wide"))
+    finally:
+        spark.conf.set(key, bound)
+
+    d_added, w_added = _added_per_commit(driver), _added_per_commit(wide)
+    assert [len(a) for a in d_added] == [1] * len(d_added)
+    assert list(map(_file_stats, d_added)) == list(map(_file_stats, w_added))
+
+    def rows(frame):
+        return sorted(tuple(r) for r in frame.collect())
+
+    assert rows(driver.read_final(spark)) == rows(wide.read_final(spark))
+    head = driver.current_version()
+    assert head == wide.current_version()
+    for a, b, classify in [(0, head, True), (1, head - 1, True),
+                           (1, head, False)]:
+        assert rows(driver.read_changes(spark, a, b, classify)) == \
+            rows(wide.read_changes(spark, a, b, classify)), (a, b)
+
+    def seqs(applier):
+        return sorted(r.seq for r in applier.quarantined(spark)
+                      .select("seq").collect())
+
+    assert seqs(d_app) and seqs(d_app) == seqs(w_app)
+
+
+def _sidecar(path):
+    """The checksummed local file system's ``.crc`` file of ``path``."""
+    import os
+
+    head, name = os.path.split(path)
+    return os.path.join(head, f".{name}.crc")
+
+
+def _range_delta(spark, n, rev0):
+    """``n`` upserts with revs from ``rev0``: a frame Spark can size."""
+    return spark.range(n).selectExpr(
+        "format_string('k%03d', id) AS doc_id", "id AS val",
+        f"id + {rev0} AS _rev", "false AS _deleted")
+
+
+def test_driver_written_delta_is_checksummed(spark, tmp_path):
+    """A delta below the bound is copied in through Hadoop's
+    ``FileSystem``, which leaves the ``.crc`` sidecar Spark's writer
+    leaves: one flipped byte fails the read with a ``ChecksumException``
+    instead of returning wrong rows. An empty delta still commits one
+    readable zero-row file."""
+    import os
+
+    from bitcoin_etl_spark.lake.table import _fits_one_partition
+
+    table = _kv_table(tmp_path)
+    df = _range_delta(spark, 50, 1)
+    assert _fits_one_partition(df)
+    table.append_delta(df, epoch_id=0)
+    table.append_delta(_range_delta(spark, 0, 100), epoch_id=1)
+    full, empty = (os.path.join(table.path, f["path"])
+                   for f in table.manifest()["files"])
+    assert os.path.exists(_sidecar(full)) and os.path.exists(_sidecar(empty))
+    assert [f["rows"] for f in table.manifest()["files"]] == [50, 0]
+    assert table.read_raw(spark).count() == 50
+
+    with open(full, "r+b") as f:
+        f.seek(8)
+        b = f.read(1)
+        f.seek(8)
+        f.write(bytes([b[0] ^ 0xFF]))
+    with pytest.raises(Exception, match="ChecksumException"):
+        table.read_raw(spark).collect()
+
+
+def test_vacuum_leaves_only_live_files(spark, tmp_path):
+    """``vacuum`` removes each unreferenced data file with its ``.crc``
+    sidecar, the temp file of a driver write a crash interrupted, and
+    each write directory left holding only commit markers. ``data/``
+    keeps the live files, their sidecars and the markers of the write
+    that made them; the count returned is of data files."""
+    import os
+    import random
+
+    from bitcoin_etl_spark.lake.table import _TMP_SUFFIX
+
+    table = _kv_table(tmp_path, n_buckets=4)
+    # an RDD-backed frame has no size estimate: Spark's writer
+    _append(spark, table, _random_epoch(random.Random(5), 0), 0)
+    for e in (1, 2):
+        table.append_delta(_range_delta(spark, 40, 100 * e), epoch_id=e)
+    delta_dir = os.path.dirname(table.manifest()["files"][-1]["path"])
+    with open(os.path.join(table.path, delta_dir,
+                           f".part-crashed.parquet{_TMP_SUFFIX}"), "w") as f:
+        f.write("a driver write killed before its copy")
+    table.compact(spark)
+
+    def on_disk():
+        return {os.path.relpath(os.path.join(r, n), table.path)
+                for r, _d, names in os.walk(os.path.join(table.path, "data"))
+                for n in names}
+
+    before = {p for p in on_disk() if p.endswith(".parquet")}
+    live = {f["path"] for f in table.manifest()["files"]}
+    removed = table.vacuum(keep_versions=1)
+    assert removed == len(before - live) > 0
+    sidecars = {_sidecar(p) for p in live}
+    markers = {os.path.join(*p.split(os.sep)[:2], m)
+               for p in live for m in ("_SUCCESS", "._SUCCESS.crc")}
+    left = on_disk()
+    assert live | sidecars <= left
+    assert left - live - sidecars <= markers, left - live - sidecars
+    dirs = {os.path.relpath(r, table.path)
+            for r, _d, _n in os.walk(os.path.join(table.path, "data"))}
+    assert all(any(p.startswith(d + os.sep) for p in live)
+               for d in dirs if d != "data"), dirs
+    assert table.read_final(spark).count() == len(
+        {r["doc_id"] for r in table.read_raw(spark).collect()}
+        - {r["doc_id"] for r in table.read_raw(spark)
+           .filter("_deleted").collect()})
+
+
+def test_manifests_read_back_as_written(spark, tmp_path, monkeypatch):
+    """A published manifest and a staged one read back equal to the
+    object that was serialized."""
+    import json
+
+    from bitcoin_etl_spark.lake import table as table_mod
+
+    table = _kv_table(tmp_path)
+    nm = table._next_manifest("probe")
+    nm["properties"]["note"] = 'épsilon ✓ "quoted"\n'
+    nm["ledger"]["p"] = {"0": {"rows": 2 ** 62, "duration_ms": 0.1 + 0.2}}
+    table._publish(nm)
+    with open(tmp_path / "t" / "manifest" / "v1.json") as f:
+        assert json.load(f) == nm
+    assert LakeTable.load(table.path).manifest() == nm
+
+    written = []
+    dumps = json.dumps
+
+    def spy(obj, *args, **kwargs):
+        written.append(obj)
+        return dumps(obj, *args, **kwargs)
+
+    monkeypatch.setattr(table_mod.json, "dumps", spy)
+    res = table.append_delta(_range_delta(spark, 5, 1), epoch_id=0,
+                             staged=True)
+    monkeypatch.undo()
+    (staged,) = [o for o in written if isinstance(o, dict)
+                 and "data_sub" in o]
+    assert table._load_staged(res["staging_id"]) == staged
+    assert staged["manifest"]["ledger"]["default"]["0"]["rows"] == 5
