@@ -17,9 +17,12 @@ engine over lake tables of pre-tokenized training sequences:
 * repair / invariant jobs: gap detection, duplicate detection, count
   conservation, patch-by-replay (reference ``clickhouse/*.py`` scripts).
 
-Everything is DataFrame-first: Catalyst plans the joins/aggregations;
-the only Python-side compute is vectorized pandas/Arrow UDF token
-validation.
+Everything is DataFrame-first: Catalyst plans the joins/aggregations,
+and the CDC path (validate, apply, compact, read, feed) runs no Python
+over rows; token validation is one Catalyst expression. Python touches
+row data only in the registry's Arrow-batched ``mapInPandas`` /
+``applyInPandas`` / ``pandas_udf`` stages under ``ops/`` (minhash and
+fingerprint hashing, packing, media features, a similarity score).
 """
 
 __version__ = "0.1.0"

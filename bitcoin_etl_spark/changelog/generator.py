@@ -220,7 +220,8 @@ def _epoch_frame(spec: ChangeLogSpec, epoch: int, st: _GenState) -> pd.DataFrame
 
 
 def is_valid_event(df: pd.DataFrame) -> np.ndarray:
-    """Vectorized validity mask — same rule the engine's pandas UDF applies.
+    """Validity mask in plain pandas/numpy — the rule the engine applies as
+    one Catalyst expression (``operators.validate.tokens_valid_expr``).
 
     D events carry no payload and are always valid; I/U must have tokens,
     n_tok == len(tokens), and all tokens in [0, vocab).

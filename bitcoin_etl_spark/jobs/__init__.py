@@ -1,4 +1,2 @@
 from .export import export_partitioned, export_items  # noqa: F401
 from .block_range import block_range_for_timestamps  # noqa: F401
-from .graphson import block_vertices, export_block_vertices  # noqa: F401
-from .jdbc import export_items_jdbc, insert_on_conflict_sql, jdbc_options  # noqa: F401

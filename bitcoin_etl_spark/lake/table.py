@@ -1,10 +1,9 @@
 """LakeTable — a snapshot-isolated, versioned parquet table with keyed
 upsert semantics and an embedded commit-epoch dedup ledger.
 
-This is the engine's sink abstraction. The primary production target is
-an Iceberg table (``MERGE INTO`` + snapshot commits); this sandbox has no
-network to fetch the iceberg-spark-runtime jar, so LakeTable implements
-the same contract on plain parquet + an atomic JSON manifest chain:
+This is the engine's sink abstraction: the contract of an Iceberg table
+(keyed ``MERGE INTO`` + snapshot commits) on plain parquet + an atomic
+JSON manifest chain, with no runtime jar beyond Spark's own:
 
 * **Insert-wins versioned upsert** — the ClickHouse
   ``ReplacingMergeTree(revision)`` analog (reference
@@ -59,6 +58,7 @@ from collections import OrderedDict
 from functools import lru_cache
 from typing import NamedTuple
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import (
     Column, DataFrame, SparkSession, Window, functions as F, types as T,
 )
@@ -106,6 +106,12 @@ _TMP_SUFFIX = ".tmp"
 _MARKERS = {"_SUCCESS", "._SUCCESS.crc"}
 
 
+def _jclass(spark: SparkSession, fqn: str) -> JavaClass:
+    """The JVM class ``fqn``, made without a py4j round trip: resolving
+    ``spark._jvm.a.b.C`` costs one round trip per package step."""
+    return JavaClass(fqn, spark._jvm._gateway_client)
+
+
 def write_parquet(df: DataFrame, out_dir: str,
                   mode: str = "errorifexists") -> None:
     """Write ``df`` as parquet under ``out_dir`` (``mode`` as in
@@ -137,13 +143,13 @@ def write_parquet(df: DataFrame, out_dir: str,
     try:
         pq.write_table(data, tmp, compression="snappy")
         spark = df.sparkSession
-        jvm = spark._jvm
-        dest = jvm.org.apache.hadoop.fs.Path(os.path.join(out_dir, name))
+        dest = _jclass(spark, "org.apache.hadoop.fs.Path")(
+            os.path.join(out_dir, name))
         fs = dest.getFileSystem(spark._jsc.hadoopConfiguration())
         # copyBytes closes both streams
-        jvm.org.apache.hadoop.io.IOUtils.copyBytes(
-            jvm.java.io.FileInputStream(tmp), fs.create(dest, False),
-            1 << 16, True)
+        _jclass(spark, "org.apache.hadoop.io.IOUtils").copyBytes(
+            _jclass(spark, "java.io.FileInputStream")(tmp),
+            fs.create(dest, False), 1 << 16, True)
     finally:
         if os.path.exists(tmp):
             os.unlink(tmp)
@@ -442,7 +448,7 @@ class LakeTable:
             ])
         # one Java String[] in one py4j call (NUL never occurs in a POSIX
         # path); parquet(*paths) pays one round trip per path
-        paths = spark._jvm.java.util.regex.Pattern.compile("\0").split(
+        paths = _jclass(spark, "java.util.regex.Pattern").compile("\0").split(
             "\0".join(os.path.join(self.path, f["path"]) for f in files)
         )
         # recursiveFileLookup disables hive partition inference so mixed
@@ -1129,17 +1135,17 @@ class LakeTable:
         from the manifest (garbage-collectable); ledger is preserved.
 
         Tombstones are RETAINED in the base by default (one row per
-        deleted key at its delete ``_rev``), mirroring the Iceberg sink's
-        merge contract (``lake/iceberg.py``): a later replay of an OLDER
-        withheld epoch (patch-by-replay, C5) carries a lower ``_rev``
-        than the tombstone, so the delete keeps winning max-``_rev``
-        dedup and the key cannot be resurrected. ``read_final`` filters
+        deleted key at its delete ``_rev``). That is the table's
+        retention contract: a later replay of an OLDER withheld epoch
+        (patch-by-replay, C5) carries a lower ``_rev`` than the
+        tombstone, so the delete keeps winning max-``_rev`` dedup and
+        the key cannot be resurrected. ``read_final`` filters
         tombstones at read time so results are unchanged. Pass
         ``min_retained_rev`` to PURGE tombstones with
         ``_rev < min_retained_rev`` — the replay horizon below which the
-        caller guarantees no epoch will ever be replayed (the
-        ``purge_tombstones_sql`` analog; running compact with a horizon
-        on an all-base table is the standalone purge pass).
+        caller guarantees no epoch will ever be replayed (running
+        compact with a horizon on an all-base table is the standalone
+        purge pass).
 
         ``buckets=None`` rewrites the whole table. ``buckets={...}``
         is MAJOR compaction of a bucket subset: only those buckets'

@@ -58,7 +58,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions 
 from ..lake.table import (
     DELETED_COL, REV_COL, LakeTable, last_event_wins, write_parquet,
 )
-from .validate import tokens_valid_expr, tokens_valid_udf
+from .validate import tokens_valid_expr
 
 CHANGE_META_COLS = ("seq", "epoch", "op", "block", "reorg_of", "ingest_ts")
 
@@ -86,7 +86,6 @@ class EpochApplier:
         pipeline_id: str = "default",
         quarantine_dir: str | None = None,
         compact_every: int = 0,
-        use_pandas_udf_validation: bool = False,
         quarantine_mode: str = "eager",  # "eager" | "lazy"
         pre_reduce: bool = True,
     ):
@@ -96,7 +95,6 @@ class EpochApplier:
             table.path, "quarantine"
         )
         self.compact_every = compact_every
-        self.use_pandas_udf_validation = use_pandas_udf_validation
         self.quarantine_mode = quarantine_mode
         # pre_reduce=True collapses each epoch to one row per key before
         # the delta write (one hash shuffle per epoch — right when epochs
@@ -114,8 +112,6 @@ class EpochApplier:
     # unresolved Columns carry no plan, so one Column serves any frame.
     @cached_property
     def _valid(self) -> Column:
-        if self.use_pandas_udf_validation:
-            return tokens_valid_udf(F.col("tokens"), F.col("n_tok"), F.col("op"))
         return tokens_valid_expr()
 
     @cached_property
@@ -225,9 +221,14 @@ class EpochApplier:
         return res
 
     def apply_changes_df(self, spark: SparkSession, df: DataFrame) -> list[dict]:
-        """Apply a multi-epoch batch in ascending epoch order (used by the
-        streaming foreachBatch body, where one micro-batch may span
-        epochs). Distinct-epoch list is tiny (bounded by batch size)."""
+        """Apply a multi-epoch frame in ascending epoch order, one
+        ``apply_epoch`` per epoch: the batch entry of the CLI ``replay``
+        command and of ``repair.patch_by_replay``. The streaming tail does
+        not come here: ``ChangeLogTailer._apply_batch`` calls
+        ``apply_epoch`` once per micro-batch, keyed by the batch id, so
+        the per-epoch ``epoch == e`` literal (a fresh plan, and a code
+        compilation, per epoch) costs no tailed commit anything. The
+        distinct-epoch list is tiny (bounded by the frame's epochs)."""
         epochs = sorted(
             r["epoch"] for r in df.select("epoch").distinct().collect()
         )

@@ -3,9 +3,10 @@ graft brief mandates beyond reference parity): deduplication families,
 similarity search, text analysis, multimodal column plumbing.
 
 All operators are DataFrame/Column compositions (JVM-side, codegen'd);
-Python appears only as Arrow-batched pandas UDFs in the multimodal
-decode stubs. Several are also exposed as oracle-checked queries in
-``plans.queries``.
+Python appears only in Arrow-batched stages (``mapInPandas`` minhash
+and fingerprint hashing, ``applyInPandas`` packing, the multimodal
+decode stubs, a ``pandas_udf`` cosine score). Several are also exposed
+as oracle-checked queries in ``plans.queries``.
 """
 
 from .text import (  # noqa: F401

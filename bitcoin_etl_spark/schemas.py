@@ -19,7 +19,7 @@ OP_DELETE = "D"
 #   op       : I | U | D (reorg rollback = D + I, SURVEY.md §2.8 C4/C5)
 #   doc_id   : primary key (item_id analog, btc_item_id_calculator.py:29-43)
 #   tokens   : payload, array<int> in [0, vocab)
-#   n_tok    : must equal size(tokens) — validated by a pandas/Arrow UDF
+#   n_tok    : must equal size(tokens) — validated by one Catalyst expression
 #   source   : multi-chain origin tag {btc,ltc,dash,zec,doge,bch}
 #   block    : ledger height the event came from (reorg unit)
 #   reorg_of : non-null on compensation events — block being rolled back

@@ -8,4 +8,3 @@ from .mappers import (  # noqa: F401
 )
 from .genesis import genesis_static_df, inject_static_rows  # noqa: F401
 from .kafka import decode_frames, encode_frames  # noqa: F401
-from .pubsub import encode_messages  # noqa: F401

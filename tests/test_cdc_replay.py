@@ -47,12 +47,12 @@ def _payload_schema():
     return T.StructType([f for f in DOCS_SCHEMA.fields if f.name != "_rev"])
 
 
-def _replay(spark, scen_dir, table_dir, *, compact_every=0, pandas_udf=False,
+def _replay(spark, scen_dir, table_dir, *, compact_every=0,
             pre_reduce=True, quarantine_mode="eager"):
     table = LakeTable.create(table_dir, _payload_schema(), key="doc_id", n_buckets=8)
     applier = EpochApplier(
-        table, compact_every=compact_every, use_pandas_udf_validation=pandas_udf,
-        pre_reduce=pre_reduce, quarantine_mode=quarantine_mode,
+        table, compact_every=compact_every, pre_reduce=pre_reduce,
+        quarantine_mode=quarantine_mode,
     )
     changes = _read_changes(spark, scen_dir)
     applier.apply_changes_df(spark, changes)
@@ -96,10 +96,7 @@ SCENARIOS = {
 def test_replay_matches_oracle(spark, tmp_path, name):
     scen_dir = str(tmp_path / name)
     generate_scenario(scen_dir, SCENARIOS[name])
-    table, applier, changes = _replay(
-        spark, scen_dir, str(tmp_path / "t"),
-        pandas_udf=(name == "bad_rows"),  # exercise the Arrow-UDF path too
-    )
+    table, applier, changes = _replay(spark, scen_dir, str(tmp_path / "t"))
     _assert_matches_oracle(spark, table, scen_dir)
     # invariants (FIXTURES.md §6)
     final = table.read_final(spark)
@@ -306,24 +303,22 @@ def test_eager_quarantine_jobs_keep_the_callers_job_group(spark, tmp_path):
 
 
 def test_validity_expr_flags_the_same_rows_as_pandas_udf(spark, tmp_path):
-    """The hot-path predicate (built once per applier) against its
-    oracle, the Arrow UDF: the same ``seq``s are invalid."""
-    from bitcoin_etl_spark.operators.validate import (
-        tokens_valid_expr,
-        tokens_valid_udf,
-    )
+    """The hot-path predicate (built once per applier) against the
+    plain-pandas mask the oracles filter with (``is_valid_event``): the
+    same ``seq``s are invalid."""
+    from bitcoin_etl_spark.changelog.generator import is_valid_event
+    from bitcoin_etl_spark.operators.validate import tokens_valid_expr
 
     scen_dir = str(tmp_path / "scen")
     generate_scenario(scen_dir, SCENARIOS["bad_rows"])
     changes = _read_changes(spark, scen_dir)
     flags = changes.select(
-        "seq", tokens_valid_expr().alias("expr"),
-        tokens_valid_udf(F.col("tokens"), F.col("n_tok"), F.col("op")).alias("udf"),
+        "seq", "op", "tokens", "n_tok", tokens_valid_expr().alias("expr"),
     ).toPandas()
-    assert flags["expr"].notna().all() and flags["udf"].notna().all()
+    assert flags["expr"].notna().all()
     bad_expr = sorted(flags.loc[~flags["expr"].astype(bool), "seq"])
-    bad_udf = sorted(flags.loc[~flags["udf"].astype(bool), "seq"])
-    assert bad_expr and bad_expr == bad_udf
+    bad_mask = sorted(flags.loc[~is_valid_event(flags), "seq"])
+    assert bad_expr and bad_expr == bad_mask
     applier = EpochApplier(LakeTable.create(str(tmp_path / "t"),
                                             _payload_schema()))
     scanned = sorted(r.seq for r in applier.scan_quarantine(changes)
@@ -1475,13 +1470,18 @@ def test_read_files_builds_with_a_fixed_number_of_py4j_calls(
         spark, tmp_path, monkeypatch):
     """Building a read of a snapshot's files must not cost one py4j
     round trip per file: the path list crosses as one Java array, so 4
-    and 40 files make the same number of calls and read every row."""
+    and 40 files make the same number of calls and read every row. A
+    driver write (``write_parquet``) likewise makes the same number of
+    calls for 10 rows and 1,000. Neither resolves a JVM class by name
+    (a ``jvm.a.b.C`` lookup costs one round trip per package step)."""
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
     from py4j.clientserver import ClientServerConnection
     from pyspark.sql import types as T
+
+    from bitcoin_etl_spark.lake.table import _fits_one_partition, write_parquet
 
     payload = T.StructType([
         T.StructField("doc_id", T.LongType(), False),
@@ -1505,21 +1505,45 @@ def test_read_files_builds_with_a_fixed_number_of_py4j_calls(
 
     def counted(self, command):
         # "m" commands are py4j's deletes of garbage-collected proxies,
-        # sent whenever Python's GC runs: not part of building the read
+        # sent whenever Python's GC runs: not part of the measured work
         if not command.startswith("m\n"):
-            calls.append(1)
+            calls.append(command)
         return send(self, command)
 
-    def build_calls(n):
+    def count_calls(fn):
         calls.clear()
         monkeypatch.setattr(ClientServerConnection, "send_command", counted)
-        df = table._read_files(spark, files[:n], schema)
-        monkeypatch.setattr(ClientServerConnection, "send_command", send)
-        assert sorted(r["doc_id"] for r in df.collect()) == list(range(n))
+        try:
+            fn()
+        finally:
+            monkeypatch.setattr(ClientServerConnection, "send_command", send)
+        # "r\nu\n<name>" is py4j's by-name lookup; a lower-case last
+        # segment names a package, one step of a ``jvm.a.b.C`` walk
+        assert not [c for c in calls if c.startswith("r\nu\n")
+                    and c.split("\n")[2].rsplit(".", 1)[-1][:1].islower()]
         return len(calls)
 
-    build_calls(4)  # warm the reader's JVM class and method lookups
+    def build_calls(n):
+        out = []
+        n_calls = count_calls(
+            lambda: out.append(table._read_files(spark, files[:n], schema)))
+        assert sorted(r["doc_id"] for r in out[0].collect()) == list(range(n))
+        return n_calls
+
+    build_calls(4)  # warm the reader's JVM method lookups
     assert build_calls(4) == build_calls(40)
+
+    def write_calls(n):
+        df = spark.range(n).select(F.col("id").alias("doc_id"),
+                                   F.lit("x").alias("val"))
+        assert _fits_one_partition(df)  # the driver path
+        out_dir = str(tmp_path / f"w{len(os.listdir(tmp_path))}")
+        n_calls = count_calls(lambda: write_parquet(df, out_dir))
+        assert spark.read.parquet(out_dir).count() == n
+        return n_calls
+
+    write_calls(10)
+    assert write_calls(10) == write_calls(1000)
 
 
 def _added_per_commit(table):

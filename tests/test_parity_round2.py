@@ -1,6 +1,6 @@
 """Round-2 parity additions: Kafka frame round-trip (S8/S14, offline),
 P12 list→indexed-fields converter, P9 nonce hex normalization,
-S4 genesis static injection, S16 GraphSON v3 export."""
+S4 genesis static injection."""
 
 import json
 
@@ -19,7 +19,7 @@ from bitcoin_etl_spark.sources.kafka import (
     writer_options,
 )
 from bitcoin_etl_spark.sources.raw_blocks import generate_raw_chain
-from bitcoin_etl_spark.sources.mappers import map_blocks, map_transactions
+from bitcoin_etl_spark.sources.mappers import map_transactions
 
 
 @pytest.fixture(scope="module")
@@ -126,256 +126,3 @@ def test_genesis_injection(spark, chain):
         spark, {"hash": "gen0", "is_coinbase": True, "lock_time": 0}, schema
     )
     assert inject_static_rows(tx, static2, key="hash").count() == tx.count() + 1
-
-
-def test_graphson_block_vertices(spark, chain):
-    """S16 golden check: the emitted line is exactly the reference's
-    make_block_vertex document (janusGraph/graphson.py:103-134)."""
-    from bitcoin_etl_spark.jobs.graphson import block_vertices
-
-    blocks = map_blocks(chain)
-    row = blocks.orderBy("number").first()
-    line = (
-        block_vertices(blocks.filter(F.col("number") == row["number"]))
-        .first()["value"]
-    )
-    doc = json.loads(line)
-    vid = f"block:{row['hash']}"
-
-    def vp(label, value):
-        return [{
-            "@type": "g:VertexProperty",
-            "@value": {
-                "id": {"@type": "g:String", "@value": f"{vid}|{label}"},
-                "label": label,
-                "value": value,
-            },
-        }]
-
-    props = {
-        "bulk_id": vp("bulk_id", {"@type": "g:String", "@value": vid}),
-        "block_hash": vp(
-            "block_hash", {"@type": "g:String", "@value": row["hash"]}
-        ),
-        "block_number": vp(
-            "block_number", {"@type": "g:Int64", "@value": row["number"]}
-        ),
-        "block_timestamp": vp(
-            "block_timestamp",
-            {"@type": "g:Date", "@value": row["timestamp"] * 1000},
-        ),
-    }
-    if row["previous_block_hash"] is not None:
-        props["previous_block_hash"] = vp(
-            "previous_block_hash",
-            {"@type": "g:String", "@value": row["previous_block_hash"]},
-        )
-    expected = {
-        "@type": "g:Vertex",
-        "@value": {
-            "id": {"@type": "g:String", "@value": vid},
-            "label": "block",
-            "properties": props,
-        },
-    }
-    assert doc == expected
-
-
-def test_graph_projection_and_ngql(spark, chain):
-    """S15/J8: Nebula-model graph projections + idempotent nGQL upsert
-    statement stream (reference nebula/schema:1-49), offline golden."""
-    from bitcoin_etl_spark.jobs.graph import (
-        address_vertices_df,
-        belongs_to_edges,
-        block_vertices_df,
-        chain_to_edges,
-        coinbase_edges,
-        lock_to_edges,
-        ngql_edge_statements,
-        ngql_vertex_statements,
-        output_vertices_df,
-        pay_to_edges,
-        spent_by_edges,
-    )
-    from bitcoin_etl_spark.sources.mappers import (
-        enrich_inputs, explode_inputs, explode_outputs,
-    )
-
-    blocks = map_blocks(chain)
-    tx = map_transactions(chain)
-    outs = explode_outputs(tx)
-    ins = enrich_inputs(explode_inputs(tx), outs)
-
-    n_blocks, n_tx = blocks.count(), tx.count()
-    assert block_vertices_df(blocks).count() == n_blocks
-    assert transaction_count_ok(tx, belongs_to_edges(tx), n_tx)
-    assert chain_to_edges(blocks).count() == n_blocks - 1  # genesis has none
-    assert coinbase_edges(tx).count() == n_blocks  # one coinbase per block
-    assert output_vertices_df(outs).count() == outs.count()
-    assert lock_to_edges(outs).count() == outs.count()
-    # every resolved spend is one spent_by edge
-    assert spent_by_edges(ins).count() == ins.filter(
-        F.col("spent_transaction_hash").isNotNull()
-    ).count()
-    assert pay_to_edges(outs).count() >= outs.count()  # >=1 address each
-    assert address_vertices_df(outs).count() > 0
-
-    # golden statement shapes
-    v = ngql_vertex_statements(
-        block_vertices_df(blocks),
-        "block",
-        {"block_number": "long", "block_timestamp": "datetime",
-         "previous_block_hash": "string"},
-    ).first()["stmt"]
-    assert v.startswith(
-        'INSERT VERTEX block(block_number, block_timestamp, '
-        'previous_block_hash) VALUES "'
-    ) and v.endswith(");") and 'datetime("' in v
-    e = ngql_edge_statements(
-        spent_by_edges(ins), "spent_by", {"spent_input_index": "long"}
-    ).first()["stmt"]
-    assert e.startswith('INSERT EDGE spent_by(spent_input_index) VALUES "')
-    assert '"->"' in e and e.endswith(");")
-    e0 = ngql_edge_statements(belongs_to_edges(tx), "belongs_to").first()["stmt"]
-    assert "belongs_to() VALUES" in e0 and e0.endswith(":();")
-
-
-def transaction_count_ok(tx, edges, n_tx):
-    return edges.count() == n_tx
-
-
-def test_jdbc_sink_offline(spark, chain):
-    """S10: JDBC sink option builder + ON CONFLICT upsert statement +
-    missing-driver gate (no server in sandbox)."""
-    from bitcoin_etl_spark.jobs.jdbc import (
-        export_items_jdbc,
-        insert_on_conflict_sql,
-        jdbc_available,
-        jdbc_options,
-    )
-
-    assert jdbc_available(spark) is False
-    o = jdbc_options("jdbc:postgresql://h/db", "blocks", user="u",
-                     batch_size=5000, num_partitions=8)
-    assert o["dbtable"] == "blocks" and o["batchsize"] == "5000"
-    assert o["numPartitions"] == "8"
-    sql = insert_on_conflict_sql(
-        "blocks", ["hash", "number", "size"], key="hash"
-    )
-    assert sql == (
-        "INSERT INTO blocks (hash, number, size) VALUES (%s, %s, %s) "
-        "ON CONFLICT (hash) DO UPDATE SET number = EXCLUDED.number, "
-        "size = EXCLUDED.size"
-    )
-    assert insert_on_conflict_sql("t", ["k"], key="k", update=False).endswith(
-        "DO NOTHING"
-    )
-    tx = map_transactions(chain)
-    with pytest.raises(RuntimeError):
-        export_items_jdbc(
-            {"transaction": tx}, "jdbc:postgresql://h/db",
-            {"transaction": "transactions"},
-        )
-    with pytest.raises(KeyError):
-        export_items_jdbc({"x": tx}, "jdbc:postgresql://h/db", {})
-
-
-def test_pubsub_message_frames(spark, chain):
-    """S9: Pub/Sub message shape — JSON data + item_id attribute +
-    per-type topic (reference google_pubsub_item_exporter wiring)."""
-    from bitcoin_etl_spark.sources.pubsub import encode_messages, topic_for
-
-    assert topic_for("projects/p/topics/crypto_bitcoin", "block") == (
-        "projects/p/topics/crypto_bitcoin.blocks"
-    )
-    tx = map_transactions(chain).select("hash", "block_number", "item_id")
-    msgs = encode_messages(tx, "transaction", "projects/p/topics/btc")
-    assert msgs.columns == ["data", "attributes", "topic"]
-    r = msgs.first()
-    assert r["topic"] == "projects/p/topics/btc.transactions"
-    body = json.loads(bytes(r["data"]))
-    assert r["attributes"]["item_id"] == body["item_id"]
-    assert msgs.count() == tx.count()
-
-
-def test_ngql_escaping_and_null_rendering(spark):
-    """Statement-stream safety: control characters in string props are
-    escaped (the stream is one-statement-per-line), and SQL NULLs render
-    as the literal NULL in EVERY dtype branch — a bare NULL column would
-    be dropped by concat_ws, misaligning values against prop names."""
-    from bitcoin_etl_spark.jobs.graph import ngql_vertex_statements
-
-    df = spark.createDataFrame(
-        [
-            ("v1", 'a"b\\c\nd\re\tf\x01g', True, 7),
-            ("v2", None, None, None),
-        ],
-        "vid string, label string, flag boolean, n long",
-    )
-    stmts = [
-        r["stmt"]
-        for r in ngql_vertex_statements(
-            df, "t", {"label": "string", "flag": "boolean", "n": "int"}
-        ).collect()
-    ]
-    assert stmts[0] == (
-        'INSERT VERTEX t(label, flag, n) VALUES "v1":'
-        '("a\\"b\\\\c\\nd\\re\\tfg", true, 7);'
-    )
-    assert stmts[1] == (
-        'INSERT VERTEX t(label, flag, n) VALUES "v2":(NULL, NULL, NULL);'
-    )
-    assert all("\n" not in s and "\r" not in s for s in stmts)
-
-
-def test_gremlin_statement_stream(spark, chain):
-    """J8 Gremlin/JanusGraph variant: coalesce(unfold(), addV(...))
-    vertex upserts and coalesce(existing-edge, addE(...)) edge upserts,
-    golden-checked offline (reference
-    janusGraph/janus_etl_partition_by_partition.py:173-185,360-391).
-    Null payload properties are omitted, mirroring the reference's
-    `if (x != null)` guards."""
-    from bitcoin_etl_spark.jobs.gremlin import (
-        gremlin_edge_statements,
-        gremlin_vertex_statements,
-    )
-    from bitcoin_etl_spark.jobs.graph import block_vertices_df
-
-    blocks = map_blocks(chain)
-    bv = block_vertices_df(blocks)
-    v = gremlin_vertex_statements(
-        bv, "block", "block_hash",
-        {"block_number": "long", "block_timestamp": "datetime",
-         "previous_block_hash": "string"},
-    ).collect()
-    assert len(v) == blocks.count()
-    sample = v[0]["stmt"]
-    assert sample.startswith('g.V().has(\'block\',\'block_hash\',"')
-    assert ".fold().coalesce(unfold(),addV('block')" in sample
-    assert ".property('block_number', " in sample and "L)" in sample
-    assert ".property('block_timestamp', new Date(" in sample
-    assert sample.endswith(".iterate()")
-    assert "\n" not in sample
-
-    tx = map_transactions(chain)
-    e = gremlin_edge_statements(
-        tx.select(F.col("hash").alias("th"), F.col("block_hash").alias("bh")),
-        "belongs_to",
-        ("transaction", "transaction_hash", "th"),
-        ("block", "block_hash", "bh"),
-    ).first()["stmt"]
-    assert e.startswith('g.V().has(\'transaction\',\'transaction_hash\',"')
-    assert ".coalesce(__.inE('belongs_to').where(__.outV().as('s'))," in e
-    assert "__.addE('belongs_to').from('s'))" in e and e.endswith(".iterate()")
-
-    # null payload property is OMITTED (reference's `if (x != null)` guard)
-    two = spark.createDataFrame(
-        [("k1", 5, None), ("k2", None, "ok")],
-        "vid string, n long, note string",
-    )
-    stmts = {r["stmt"] for r in gremlin_vertex_statements(
-        two, "t", "tkey", {"n": "long", "note": "string"}).collect()}
-    s1 = next(s for s in stmts if '"k1"' in s)
-    s2 = next(s for s in stmts if '"k2"' in s)
-    assert ".property('n', 5L)" in s1 and "note" not in s1
-    assert '.property(\'note\', "ok")' in s2 and "'n'" not in s2
