@@ -12,17 +12,15 @@ JSON manifest chain, with no runtime jar beyond Spark's own:
   tombstone rows (``_deleted=true``) — merge-on-read, like RMT parts.
 * **Read-time finality** — ``read_final()`` is the ``SELECT … FINAL``
   analog (reference ``pipelines/block_sync_pipeline.py:269-291``): the
-  max-``_rev`` row per key, tombstones dropped, by one plan
-  (``_dedup_latest``): a key-hash window ordered by ``_rev`` desc.
-  ``last_event_wins`` (max_by — map-side partial aggregation collapses
-  hot keys *before* the shuffle, the skew mitigation SURVEY.md §4 calls
-  for) is the same rule for small pre-pruned frames and the reference
-  the tests pin the window to.
+  max-``_rev`` row per key, tombstones dropped, by the one
+  last-event-wins rule of the lake layer (``last_event_wins``): a
+  ``max_by`` aggregate whose map-side partial step collapses hot keys
+  *before* the shuffle, the skew mitigation SURVEY.md §4 calls for.
 * **Explicit compaction** — ``compact()`` is the ``OPTIMIZE TABLE …
   FINAL`` analog (reference ``clickhouse/clickhouse_final_block_partition
   .py:61-76``): folds all delta files into hash-bucketed base files
-  through the same window, whose key-hash output the bucket write
-  keeps without a second exchange.
+  through the same aggregate, whose key-hash (or single-partition)
+  output the bucket write keeps without a second exchange.
 * **Atomic commits + snapshot isolation** — each commit writes data files
   then publishes manifest ``v{N}.json`` via an exclusive hard-link (POSIX
   ``link(2)`` fails if the target exists → optimistic concurrency).
@@ -60,7 +58,7 @@ from typing import NamedTuple
 
 from py4j.java_gateway import JavaClass
 from pyspark.sql import (
-    Column, DataFrame, SparkSession, Window, functions as F, types as T,
+    Column, DataFrame, SparkSession, functions as F, types as T,
 )
 
 from ..schemas import merge_schemas, schema_from_json
@@ -172,35 +170,39 @@ def _hashed_bucket(f: dict, key_type: str) -> int | None:
 def _latest_exprs(columns: tuple[str, ...], key: str,
                   seq: str) -> tuple[Column, tuple[Column, ...]]:
     """``last_event_wins``' aggregate and output projection for one input
-    column list. Unresolved Columns carry no plan, so one set serves
-    every frame of that shape; building them costs py4j round trips,
-    which a small frame's whole read would otherwise pay per call."""
+    column list; the projection keeps the input's column order. Unresolved
+    Columns carry no plan, so one set serves every frame of that shape;
+    building them costs py4j round trips, which a small frame's whole
+    read would otherwise pay per call."""
     payload = [c for c in columns if c != key]
     latest = F.col("_latest")
     return (F.max_by(F.struct(*payload), F.col(seq)).alias("_latest"),
-            (F.col(key), *[latest.getField(c).alias(c) for c in payload]))
+            tuple(F.col(c) if c == key else latest.getField(c).alias(c)
+                  for c in columns))
 
 
 def last_event_wins(df: DataFrame, key: str = "doc_id",
                     seq: str = "seq") -> DataFrame:
     """Collapse to one row per key: the event with the max ``seq`` wins.
+    The lake layer's one finality rule: ``read_final``, ``read_staged``,
+    ``compact``, ``scan_keys``, the feed and the apply pre-reduce all
+    reduce through it.
 
-    Keeps all columns; deterministic given unique ``seq`` per key-event
+    Keeps all columns, in the input's order; deterministic given unique
+    ``seq`` per key-event
     (duplicate (key, seq) pairs are identical rows by construction, so
     any winner is correct — the replayed-epoch case). The BCH
     duplicate-txid analog (reference fixture
     ``tests/resources/test_export_blocks_job/bitcoin_cash/block_with_duplicate_txid``)
     generalized.
 
-    ``groupBy(key).agg(max_by(struct(payload), seq))`` rather than a
-    row_number window: max_by is a true aggregate, so Spark plans a
-    map-side partial aggregation that collapses hot keys on each input
-    partition *before* the shuffle — a Zipf-hot key contributes one row
-    per upstream partition instead of flooding a single window
-    partition. That plus AQE skew-join splitting for the residual
-    shuffle is the engine's skew defense (SURVEY.md §4). An input that
-    ``_fits_one_partition`` is aggregated in one partition, with no
-    shuffle at all.
+    ``groupBy(key).agg(max_by(struct(payload), seq))``: max_by is a true
+    aggregate, so Spark plans a map-side partial aggregation that
+    collapses hot keys on each input partition *before* the shuffle — a
+    Zipf-hot key contributes one row per upstream partition, not every
+    version, to the task that owns it (SURVEY.md §4). The output is
+    hash-partitioned on ``key``. An input that ``_fits_one_partition``
+    is aggregated in one partition, with no shuffle at all.
     """
     agg, out = _latest_exprs(tuple(df.columns), key, seq)
     if _fits_one_partition(df):
@@ -358,20 +360,22 @@ class LakeTable:
         link(2) is atomic and fails with EEXIST if v{N} was already
         committed by a concurrent writer."""
         v = manifest["version"]
+        # one C-encoded string (json.dump streams through the pure-Python
+        # encoder, which dominates a long chain's commit), made before any
+        # file is opened: an unserializable manifest leaves nothing behind
+        data = json.dumps(manifest)
         tmp = os.path.join(self._manifest_dir, f".tmp-{uuid.uuid4().hex}.json")
-        with open(tmp, "w") as f:
-            # one C-encoded string: json.dump streams through the
-            # pure-Python encoder, which dominates a long chain's commit
-            f.write(json.dumps(manifest))
-            f.flush()
-            os.fsync(f.fileno())
-        final = os.path.join(self._manifest_dir, f"v{v}.json")
         try:
-            os.link(tmp, final)
+            with open(tmp, "w") as f:
+                f.write(data)
+                f.flush()
+                os.fsync(f.fileno())
+            os.link(tmp, os.path.join(self._manifest_dir, f"v{v}.json"))
         except FileExistsError as e:
             raise CommitConflict(f"version {v} already committed") from e
         finally:
-            os.unlink(tmp)
+            if os.path.exists(tmp):
+                os.unlink(tmp)
 
     def schema(self, version: int | None = None) -> T.StructType:
         return schema_from_json(json.dumps(self.manifest(version)["schema"]))
@@ -482,10 +486,10 @@ class LakeTable:
         plans no dedup at all, and after PARTIAL compaction the
         merge-on-read cost stays proportional to the uncompacted
         fraction, not the table. Every other file goes through
-        ``_dedup_latest``. An unbucketed delta's rows span every bucket,
-        and so do a file's bucketed under a key type since widened
-        (``_hashed_bucket``), so either sends every file through the
-        dedup."""
+        ``last_event_wins``. An unbucketed delta's rows span every
+        bucket, and so do a file's bucketed under a key type since
+        widened (``_hashed_bucket``), so either sends every file through
+        the dedup."""
         kt = schema[self.key].dataType.jsonValue()
         buckets = [_hashed_bucket(f, kt) for f in files]
         dirty = {b for f, b in zip(files, buckets) if f.get("kind") != "base"}
@@ -496,28 +500,10 @@ class LakeTable:
             rest = [f for f, b in zip(files, buckets) if b in dirty]
         df = self._read_files(spark, clean, schema)
         if rest:
-            latest = self._dedup_latest(spark, rest, schema)
+            latest = last_event_wins(self._read_files(spark, rest, schema),
+                                     self.key, REV_COL)
             df = df.unionByName(latest) if clean else latest
         return df.filter(~F.col(DELETED_COL)).drop(DELETED_COL)
-
-    def _dedup_latest(self, spark: SparkSession, files: list[dict],
-                      schema: T.StructType) -> DataFrame:
-        """Latest row image per key, tombstones KEPT (``_deleted`` flags
-        keys whose newest event is a delete): ONE hash exchange on the
-        key, sort, ``row_number`` by ``_rev`` desc. The window returns one
-        row per key by construction, so identical ``(key, _rev)`` rows of
-        a replayed delta need no second dedup. Map-side partial
-        aggregation (``last_event_wins``) is worth little here because
-        epoch deltas are already pre-reduced per key, and the output's
-        key-hash partitioning is what ``compact``'s bucket write
-        assumes."""
-        w = Window.partitionBy(self.key).orderBy(F.col(REV_COL).desc())
-        return (
-            self._read_files(spark, files, schema)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
 
     def _point_lookup_files(self, value: str, bucket: int,
                             version: int | None = None) -> list[dict]:
@@ -606,7 +592,8 @@ class LakeTable:
         the one the publishing manifest records.
         ``shuffle=False`` replaces the bucket repartition with a narrow
         ``coalesce`` — for callers whose frame is ALREADY key-hash
-        partitioned (e.g. the compaction dedup output): every row of a
+        partitioned or in one partition (the compaction dedup output,
+        ``last_event_wins``): every row of a
         bucket then still lands in files of that bucket's directory, the
         writer-task cap still holds, and one full-data exchange is
         saved (a bucket may span several files, which the manifest
@@ -996,14 +983,17 @@ class LakeTable:
         nm = build_nm()
         if staged:
             sid = uuid.uuid4().hex[:12]
-            spath = os.path.join(self._manifest_dir, f"staged-{sid}.json")
-            with open(spath, "w") as f:
-                f.write(json.dumps({
-                    "manifest": nm,
-                    "added": [e["path"] for e in entries],
-                    "data_sub": sub,
-                    "staged_at": time.time(),
-                }))
+            data = json.dumps({
+                "manifest": nm,
+                "added": [e["path"] for e in entries],
+                "data_sub": sub,
+                "staged_at": time.time(),
+            })
+            # a dot-named temp file: staged_commits never lists a torn one
+            tmp = os.path.join(self._manifest_dir, f".tmp-staged-{sid}.json")
+            with open(tmp, "w") as f:
+                f.write(data)
+            os.replace(tmp, self._staged_path(sid))  # atomic on POSIX
             return {"skipped": False, "staged": True, "staging_id": sid,
                     "epoch": epoch_id, "rows": rows,
                     "parent_version": nm["parent"]}
@@ -1185,14 +1175,14 @@ class LakeTable:
                 and min_retained_rev is None and nb == m["n_buckets"]):
             return {"compacted": False, "reason": "already-base"}
         schema = self.schema()
-        # the bucket write keeps the window's key-hash partitioning
-        # (shuffle=False): one exchange for the whole compaction
-        final = self._dedup_latest(spark, target, schema)
+        # the bucket write keeps the aggregate's key-hash partitioning
+        # (shuffle=False): at most one exchange for the whole compaction
+        final = last_event_wins(self._read_files(spark, target, schema),
+                                self.key, REV_COL)
         if min_retained_rev is not None:
             final = final.filter(
                 ~F.col(DELETED_COL) | (F.col(REV_COL) >= min_retained_rev)
             )
-        final = self._align(final, schema)
         sub = f"base-v{m['version'] + 1}-{uuid.uuid4().hex[:8]}"
         entries = self._write_data(final, sub, n_buckets=nb, shuffle=False)
         for e in entries:
@@ -1327,7 +1317,12 @@ class LakeTable:
         manifests (snapshot-expiry analog), each with its ``.crc``
         sidecar, the temp files of driver writes a crash interrupted, and
         write directories left holding only commit markers. Returns the
-        number of data files removed."""
+        number of data files removed. ``keep_versions`` must be at least
+        1: the head snapshot is always kept."""
+        if keep_versions < 1:
+            raise ValueError(
+                f"vacuum keep_versions must be >= 1 (got {keep_versions}): "
+                f"0 would delete the live snapshot's data files")
         cur = self.current_version() or 0
         keep: set[str] = set()
         for v in range(max(0, cur - keep_versions + 1), cur + 1):

@@ -519,14 +519,22 @@ def test_read_changes_incremental_feed(spark, tmp_path):
 
 
 def _reference_final(spark, table):
-    """The reference the dedup window is pinned to: ``last_event_wins``
-    over every row version, tombstones dropped."""
-    from bitcoin_etl_spark.lake.table import (
-        DELETED_COL, REV_COL, last_event_wins,
-    )
+    """The engine-independent reference ``read_final`` is pinned to: the
+    ``FINAL`` rule as one Spark SQL window over every row version,
+    tombstones dropped (the query the verify recipe's DuckDB compare
+    runs)."""
+    import uuid
 
-    return last_event_wins(table.read_raw(spark), table.key, REV_COL) \
-        .filter(~F.col(DELETED_COL)).drop(DELETED_COL)
+    from bitcoin_etl_spark.lake.table import DELETED_COL, REV_COL
+
+    raw = table.read_raw(spark)
+    view = f"raw_{uuid.uuid4().hex[:8]}"
+    raw.createOrReplaceTempView(view)
+    cols = ", ".join(f"`{c}`" for c in raw.columns if c != DELETED_COL)
+    return spark.sql(
+        f"SELECT {cols} FROM (SELECT *, row_number() OVER (PARTITION BY "
+        f"`{table.key}` ORDER BY {REV_COL} DESC) AS _rn FROM {view}) "
+        f"WHERE _rn = 1 AND NOT {DELETED_COL}")
 
 
 def _rowset(df):
@@ -537,30 +545,44 @@ def _executed_plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_dedup_auto_exact_winner_decision(spark, tmp_path, monkeypatch):
-    """The one dedup plan, the key window, over a hot-key table whose
-    delta rows collapse to 8 winners, one delta file replayed so its
-    (key, _rev) rows appear twice: ``read_final``, and ``read_final``
-    after ``compact``, equal the ``last_event_wins`` reference, and
-    neither the read nor the compaction write plans a broadcast join.
-    The table carries the inert ``assume_unique_rev`` property that
-    older writers set; it changes nothing."""
-    from pyspark.sql import types as T
-
-    payload = T.StructType([
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("val", T.LongType(), True),
-    ])
-    table = LakeTable.create(str(tmp_path / "t"), payload, n_buckets=4,
-                             properties={"assume_unique_rev": True})
-    write_plans = []
+def _spy_write_plans(monkeypatch):
+    """The executed plan of every frame ``_write_data`` is handed, in
+    call order."""
+    plans = []
     write_data = LakeTable._write_data
 
     def spy(self, df, *args, **kwargs):
-        write_plans.append(_executed_plan(df))
+        plans.append(_executed_plan(df))
         return write_data(self, df, *args, **kwargs)
 
     monkeypatch.setattr(LakeTable, "_write_data", spy)
+    return plans
+
+
+def _assert_one_aggregate(plan):
+    assert ("Window" not in plan and "max_by" in plan
+            and "BroadcastHashJoin" not in plan), plan[:2000]
+
+
+def test_dedup_auto_exact_winner_decision(spark, tmp_path, monkeypatch):
+    """The one dedup plan, the ``last_event_wins`` aggregate, over a
+    hot-key table whose delta rows collapse to 8 winners, one delta file
+    replayed so its (key, _rev) rows appear twice: ``read_final``, and
+    ``read_final`` after ``compact``, equal the SQL window reference, in
+    the payload schema's column order although the key is not its first
+    column, and neither the read nor the compaction write plans a
+    window or a broadcast join. The table carries the inert
+    ``assume_unique_rev`` property that older writers set; it changes
+    nothing."""
+    from pyspark.sql import types as T
+
+    payload = T.StructType([
+        T.StructField("val", T.LongType(), True),
+        T.StructField("doc_id", T.StringType(), False),
+    ])
+    table = LakeTable.create(str(tmp_path / "t"), payload, n_buckets=4,
+                             properties={"assume_unique_rev": True})
+    write_plans = _spy_write_plans(monkeypatch)
 
     rows = []
     rev = 0
@@ -579,18 +601,65 @@ def test_dedup_auto_exact_winner_decision(spark, tmp_path, monkeypatch):
     expect = {f"k{k}": 40 + k for k in range(6)} | {"extra1": 1, "extra2": 2}
     ref = _rowset(_reference_final(spark, table))
     final = table.read_final(spark)
-    plan = _executed_plan(final)
-    assert "Window" in plan and "BroadcastHashJoin" not in plan, plan[:2000]
+    assert final.columns == [*payload.names, "_rev"]
+    _assert_one_aggregate(_executed_plan(final))
     assert {r["doc_id"]: r["val"] for r in final.collect()} == expect
     assert _rowset(final) == ref
 
     write_plans.clear()
     table.compact(spark)
     (executed,) = write_plans
-    assert "Window" in executed and "BroadcastHashJoin" not in executed, \
-        executed[:2000]
+    _assert_one_aggregate(executed)
     assert table.read_raw(spark).count() == len(expect)  # one row per key
     assert _rowset(table.read_final(spark)) == ref
+
+
+def test_compaction_above_the_bound_reduces_a_hot_key_before_the_exchange(
+        spark, tmp_path, monkeypatch):
+    """Above the one-partition bound the dedup shuffles on the key: the
+    compaction write's plan runs ``partial_max_by`` below the
+    ``Exchange``, so a hot key's 50 versions over three unbucketed
+    deltas reach the shuffle as at most one row per input partition.
+    ``read_final`` before and after ``compact`` equals the SQL window
+    reference."""
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        table = _kv_table(tmp_path, n_buckets=4)
+        write_plans = _spy_write_plans(monkeypatch)
+        rev = 0
+        for e, n_hot in enumerate((17, 17, 16)):
+            rows = []
+            for _ in range(n_hot):
+                rev += 1
+                rows.append(("hot", rev * 7, rev, False))
+            hot_rev = rev
+            for i in range(10):
+                rev += 1
+                rows.append((f"c{e}{i}", rev, rev, i == 9 and e > 0))
+            _append(spark, table, rows, e)
+        ref = _rowset(_reference_final(spark, table))
+        final = table.read_final(spark)
+        # 30 cold keys, two of them deleted in the epoch that wrote them
+        assert len(ref) == 29
+        assert {r["doc_id"]: r["val"] for r in final.collect()}["hot"] == \
+            hot_rev * 7
+        assert _rowset(final) == ref
+
+        write_plans.clear()
+        table.compact(spark)
+        (plan,) = write_plans
+        lines = plan.splitlines()
+        exchange = next(i for i, ln in enumerate(lines)
+                        if "Exchange hashpartitioning(doc_id" in ln)
+        partial = next(i for i, ln in enumerate(lines)
+                       if "partial_max_by" in ln)
+        assert exchange < partial, plan
+        assert "Window" not in plan, plan
+        assert _rowset(table.read_final(spark)) == ref
+    finally:
+        spark.conf.set(conf, saved)
 
 
 def test_read_changes_across_schema_evolution(spark, tmp_path):
@@ -1729,3 +1798,43 @@ def test_manifests_read_back_as_written(spark, tmp_path, monkeypatch):
                  and "data_sub" in o]
     assert table._load_staged(res["staging_id"]) == staged
     assert staged["manifest"]["ledger"]["default"]["0"]["rows"] == 5
+
+
+def test_unserializable_manifest_leaves_no_debris(spark, tmp_path):
+    """A commit whose manifest does not serialize (a stats callback that
+    returns a non-JSON value) fails before any manifest file is opened,
+    staged or not: ``manifest/`` keeps only ``v0.json``, no staged
+    commit is listed, and ``vacuum`` runs and reclaims the two orphaned
+    delta files."""
+    import os
+
+    table = _kv_table(tmp_path)
+    for staged in (True, False):
+        with pytest.raises(TypeError):
+            table.append_delta(_range_delta(spark, 5, 1), epoch_id=0,
+                               stats_cb=lambda: {"bad": object()},
+                               staged=staged)
+    assert os.listdir(os.path.join(table.path, "manifest")) == ["v0.json"]
+    assert table.staged_commits() == []
+    assert table.vacuum() == 2
+    assert table.read_final(spark).count() == 0
+
+
+def test_vacuum_always_keeps_the_head(spark, tmp_path):
+    """``vacuum(keep_versions < 1)`` would keep no snapshot and delete
+    the head's data files: it raises before any file is touched."""
+    import os
+
+    table = _kv_table(tmp_path)
+    table.append_delta(_range_delta(spark, 5, 1), epoch_id=0)
+
+    def on_disk():
+        return sorted(os.path.join(r, n)
+                      for r, _d, names in os.walk(table.path) for n in names)
+
+    before = on_disk()
+    for keep in (0, -1):
+        with pytest.raises(ValueError, match="keep_versions"):
+            table.vacuum(keep_versions=keep)
+    assert on_disk() == before
+    assert table.read_final(spark).count() == 5
